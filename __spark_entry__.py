@@ -840,17 +840,6 @@ def _q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnow_fingerprints(_docs(spark, sf_dir), ngram=3, window=4)
 
 
-def _q_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from geo_spark.operators.ann import lsh_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries_df = emb.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
-    )
-    out = lsh_topk(emb, queries_df, k=10, dim=64)
-    return out.select("qid", "vec_id", F.round("cosine", 6).alias("cos_r"), "rank")
-
-
 def _q_buffered_admin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geo_spark.operators.geometry2 import buffer_ring
     from geo_spark.sources.documents import synth_admin_polygons
@@ -2049,51 +2038,19 @@ def _q_voronoi_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan over it); the rings are ~1 MB at bench scale and Spark's LRU
     # block eviction bounds accumulation across a long session
     cells = voronoi_distributed(sites, id_col="doc_id").persist()
-    local = getattr(cells, "_geo_spark_local_rows", None)
-    if local is not None:
-        # small-n driver construction: the rings are already on the driver,
-        # so build the polygon rows in-process (same values the SQL
-        # projection below computes) and hand them straight to pip_join via
-        # the local-rows handshake — no take() round trip through the
-        # local-relation plan
-        poly_rows = []
-        for r in local:
-            ring = r["cell_ring"]
-            xs_ = [c["x"] for c in ring]
-            ys_ = [c["y"] for c in ring]
-            poly_rows.append(
-                {
-                    "polygon_id": r["doc_id"],
-                    "exterior": ring,
-                    "interiors": [],
-                    "xmin": min(xs_) if xs_ else None,
-                    "ymin": min(ys_) if ys_ else None,
-                    "xmax": max(xs_) if xs_ else None,
-                    "ymax": max(ys_) if ys_ else None,
-                }
-            )
-        polys = spark.createDataFrame(
-            poly_rows,
-            schema="polygon_id long, "
-            "exterior array<struct<x:double,y:double>>, "
-            "interiors array<array<struct<x:double,y:double>>>, "
-            "xmin double, ymin double, xmax double, ymax double",
-        )
-        polys._geo_spark_local_rows = poly_rows
-    else:
-        polys = cells.select(
-            F.col("doc_id").alias("polygon_id"),
-            F.col("cell_ring").alias("exterior"),
-            F.array().cast("array<array<struct<x:double,y:double>>>").alias("interiors"),
-        )
-        xs = F.transform(F.col("exterior"), lambda p: p["x"])
-        ys = F.transform(F.col("exterior"), lambda p: p["y"])
-        polys = (
-            polys.withColumn("xmin", F.array_min(xs))
-            .withColumn("ymin", F.array_min(ys))
-            .withColumn("xmax", F.array_max(xs))
-            .withColumn("ymax", F.array_max(ys))
-        )
+    polys = cells.select(
+        F.col("doc_id").alias("polygon_id"),
+        F.col("cell_ring").alias("exterior"),
+        F.array().cast("array<array<struct<x:double,y:double>>>").alias("interiors"),
+    )
+    xs = F.transform(F.col("exterior"), lambda p: p["x"])
+    ys = F.transform(F.col("exterior"), lambda p: p["y"])
+    polys = (
+        polys.withColumn("xmin", F.array_min(xs))
+        .withColumn("ymin", F.array_min(ys))
+        .withColumn("xmax", F.array_max(xs))
+        .withColumn("ymax", F.array_max(ys))
+    )
     probes = spark.sql(
         """
         SELECT CAST(i * 25 + j AS BIGINT) AS probe_id,

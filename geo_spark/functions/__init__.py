@@ -146,76 +146,6 @@ def haversine_destination_cols(lon, lat, bearing_deg, meters,
     return out_lon, F.degrees(dlat)
 
 
-def winding_position_sql(px, py, ring) -> Column:
-    """Ternary point-vs-ring position (+1/0/-1) as a pure Catalyst expression.
-
-    The reference's winding-number loop with boundary short-circuit
-    (``coordinate_position.rs:399-455``) re-expressed as a higher-order
-    ``aggregate`` over the ring's edge list — runs entirely JVM-side (no
-    Arrow exchange, no Python workers), which is the scale path for the PIP
-    refine. Orientation uses the plain IEEE-double cross product: exact for
-    axis-parallel edges (one factor is exactly 0) and correct for all
-    non-near-degenerate cases; use the robust pandas kernel (pip_join
-    ``refine='pandas'``) when inputs can be adversarially collinear.
-
-    ``ring`` is an array<struct<x,y>> column (closed ring).
-    """
-    px = F.col(px) if isinstance(px, str) else px
-    py = F.col(py) if isinstance(py, str) else py
-    ring = F.col(ring) if isinstance(ring, str) else ring
-    idx = F.sequence(F.lit(0), F.size(ring) - 2)
-
-    def edge_acc(acc, i):
-        s = F.element_at(ring, i + 1)
-        e = F.element_at(ring, i + 2)
-        sx, sy = s["x"], s["y"]
-        ex, ey = e["x"], e["y"]
-        det = (sx - px) * (ey - py) - (sy - py) * (ex - px)
-        branch_a = (sy <= py) & (ey >= py)
-        branch_b = (~(sy <= py)) & (ey <= py)
-        between = (px >= F.least(sx, ex)) & (px <= F.greatest(sx, ex))
-        onb = (branch_a | branch_b) & (det == 0) & between
-        dwn = (
-            F.when(branch_a & (det > 0) & (ey != py), F.lit(1))
-            .when(branch_b & (det < 0), F.lit(-1))
-            .otherwise(F.lit(0))
-        )
-        return F.struct(
-            (acc["wn"] + dwn).alias("wn"), (acc["onb"] | onb).alias("onb")
-        )
-
-    res = F.aggregate(
-        idx,
-        F.struct(F.lit(0).alias("wn"), F.lit(False).alias("onb")),
-        edge_acc,
-    )
-    return (
-        F.when(res["onb"], F.lit(0))
-        .when(res["wn"] != 0, F.lit(1))
-        .otherwise(F.lit(-1))
-        .cast("byte")
-    )
-
-
-def polygon_position_sql(px, py, exterior, interiors) -> Column:
-    """Polygon (shell + holes) position as pure SQL, matching the reference's
-    shell/hole combination (``coordinate_position.rs:281-319``): on-shell → 0;
-    outside shell → -1; inside shell: on any hole boundary → 0, inside any
-    hole → -1, else +1."""
-    ext_pos = winding_position_sql(px, py, exterior)
-    interiors = F.col(interiors) if isinstance(interiors, str) else interiors
-    hole_pos = F.transform(interiors, lambda r: winding_position_sql(px, py, r))
-    on_hole = F.exists(hole_pos, lambda p: p == 0)
-    in_hole = F.exists(hole_pos, lambda p: p == 1)
-    return (
-        F.when(ext_pos != 1, ext_pos)
-        .when(on_hole, F.lit(0))
-        .when(in_hole, F.lit(-1))
-        .otherwise(F.lit(1))
-        .cast("byte")
-    )
-
-
 def euclidean_meters(ax, ay, bx, by) -> Column:
     """Planar distance as SQL."""
     cols = [F.col(c) if isinstance(c, str) else c for c in (ax, ay, bx, by)]

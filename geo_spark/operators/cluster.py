@@ -13,8 +13,8 @@ DBSCAN re-expressed for Spark (reference semantics:
    because their whole neighborhood is present;
 4. merge cross-cell clusters: a point labeled non-noise in several cells'
    runs witnesses that those (cell, local_label) clusters are one. Small
-   witness-edge sets (≤ ``driver_merge_threshold``) canonicalize with a
-   driver union-find; larger ones run a fully distributed
+   witness-edge sets (within the ``dbscan.edges`` route budget) canonicalize
+   with a driver union-find; larger ones run a fully distributed
    connected-components pass (min-label propagation + pointer jumping,
    O(log diameter) join rounds) — at web scale #clusters can reach 10⁷⁺ and
    must never be collected;
@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geo_spark.functions import _Z_BITS, _spread_bits_col
+from geo_spark.operators.route import fetch_if_small
 
 
 def _res_for_epsilon(epsilon: float) -> int:
@@ -221,14 +222,13 @@ def dbscan(
     lon_col: str = "lon",
     lat_col: str = "lat",
     res: int | None = None,
-    driver_merge_threshold: int = 100_000,
     include_core: bool = False,
 ) -> DataFrame:
     """(id, cluster bigint) — cluster ids canonical & deterministic, noise=-1.
 
-    ``driver_merge_threshold``: witness-edge count above which the cross-cell
-    merge runs as distributed connected components instead of a driver
-    union-find (0 forces the distributed path). Both give identical ids.
+    Witness edges beyond the ``dbscan.edges`` route budget
+    (``operators.route``) merge as distributed connected components instead
+    of a driver union-find. Both give identical ids.
 
     ``include_core`` adds an exact ``is_core`` boolean (|N_eps| >=
     min_samples). It is decided at the point's home cell, where the full
@@ -277,15 +277,9 @@ def dbscan(
     )
     keys = labeled.filter("label >= 0").select("cell", "label").distinct()
 
-    # one job probes AND fetches: limit(thr+1).collect() returns the entire
-    # edge set whenever it is within the threshold (the old count-then-
-    # collect pair paid a second scheduling wave for the same rows)
-    edge_rows = (
-        edges.limit(driver_merge_threshold + 1).collect()
-        if driver_merge_threshold > 0
-        else None
-    )
-    if edge_rows is not None and len(edge_rows) <= driver_merge_threshold:
+    # one job probes AND fetches the whole edge set when it fits the budget
+    edge_rows = fetch_if_small(edges, "dbscan.edges")
+    if edge_rows is not None:
         canon_df = _canon_driver(edge_rows, keys.collect(), spark)
         if canon_df is not None:
             with_gid = labeled.join(F.broadcast(canon_df), ["cell", "label"], "left")

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geo_spark.operators.boolops import MULTIPOLY_TYPE, _result_to_rows
+from geo_spark.operators.route import fetch_if_small, fits
 from geo_spark.operators.scalar import COORDS_TYPE, _to_np, _to_rows
 
 
@@ -319,7 +320,6 @@ def voronoi_distributed(
     clip_rect: tuple | None = None,
     res: int | None = None,
     target_sites_per_tile: int = 400,
-    driver_site_threshold: int = 2_000,
 ) -> DataFrame:
     """Exact Voronoi with NO single-task global stage — tile+halo
     certificate construction (voronoi.rs:216 semantics; cells clipped to
@@ -377,47 +377,28 @@ def voronoi_distributed(
         f"{gcol} {gtype}, {id_col} {itype}, {lon_col} double, {lat_col} double, "
         f"cell_ring {ring_t}"
     )
-    # Small-side driver path (same adaptive pattern as DBSCAN / polygonize /
-    # the cycle labeling): below the threshold one take() + the local kernel
-    # beats the 3 sequential job waves (bbox aggs, pass-1 materialize,
-    # completion) whose scheduling dominates at small n. The local kernel is
-    # the distributed construction's parity reference (same clip-rect
-    # formula, same cell constructor), so rings agree up to rotation; 0
-    # forces the distributed path (parity tests pin both).
-    if driver_site_threshold > 0:
-        fetched = s.take(driver_site_threshold + 1)
-        if len(fetched) <= driver_site_threshold:
-            from geo_spark.kernels.triangulate import voronoi_cells
+    # Small-side driver path (the "voronoi.sites" route): within budget, one
+    # fetch + the local kernel beats the 3 sequential job waves (bbox aggs,
+    # pass-1 materialize, completion) whose scheduling dominates at small n.
+    # The local kernel is the distributed construction's parity reference
+    # (same clip-rect formula, same cell constructor), so rings agree up to
+    # rotation.
+    fetched = fetch_if_small(s, "voronoi.sites")
+    if fetched is not None:
+        from geo_spark.kernels.triangulate import voronoi_cells
 
-            by_group: dict = {}
-            for r in fetched:
-                by_group.setdefault(r[0], []).append((r[1], r[2], r[3]))
-            out_rows = []
-            for g, members in by_group.items():
-                pts = np.asarray(
-                    [(m[1], m[2]) for m in members], dtype=np.float64
-                )
-                rect = tuple(clip_rect) if clip_rect is not None else None
-                cells = voronoi_cells(pts, clip_rect=rect)
-                for (mid, mlon, mlat), ring in zip(members, cells):
-                    out_rows.append(
-                        (g, mid, float(mlon), float(mlat), _to_rows(ring))
-                    )
-            out = sites.sparkSession.createDataFrame(out_rows, out_schema)
-            if group_col is None:
-                out = out.drop(gcol)
-            # same handshake as synth_admin_polygons → pip_join: downstream
-            # consumers (e.g. a PIP probe join over the cells) can reuse the
-            # driver-resident rows instead of a take() round trip through
-            # the local-relation plan
-            cols = ([] if group_col is None else [gcol]) + [
-                id_col, lon_col, lat_col, "cell_ring"
-            ]
-            skip = 0 if group_col is not None else 1
-            out._geo_spark_local_rows = [
-                dict(zip(cols, r[skip:] if skip else r)) for r in out_rows
-            ]
-            return out
+        by_group: dict = {}
+        for r in fetched:
+            by_group.setdefault(r[0], []).append((r[1], r[2], r[3]))
+        out_rows = []
+        for g, members in by_group.items():
+            pts = np.asarray([(m[1], m[2]) for m in members], dtype=np.float64)
+            rect = tuple(clip_rect) if clip_rect is not None else None
+            cells = voronoi_cells(pts, clip_rect=rect)
+            for (mid, mlon, mlat), ring in zip(members, cells):
+                out_rows.append((g, mid, float(mlon), float(mlat), _to_rows(ring)))
+        out = sites.sparkSession.createDataFrame(out_rows, out_schema)
+        return out if group_col is not None else out.drop(gcol)
     s = s.cache()
     aggs = (
         s.groupBy(gcol)
@@ -429,17 +410,16 @@ def voronoi_distributed(
         .collect()
     )
     n = sum(r["cnt"] for r in aggs)
-    # Grouped middle route: when every group individually fits the driver
-    # threshold (but the total does not), one applyInPandas task per group
-    # runs the local kernel — groups in parallel across executors, no tile
-    # machinery, same rings (voronoi_of_group IS the parity reference).
-    # Only taken for per-group default clip rects, which the kernel
-    # reproduces bit-identically from the same bbox+10% formula.
+    # Grouped middle route: when every group individually fits the
+    # "voronoi.sites" budget (but the total does not), one applyInPandas
+    # task per group runs the local kernel — groups in parallel across
+    # executors, no tile machinery, same rings (voronoi_of_group IS the
+    # parity reference). Only taken for per-group default clip rects, which
+    # the kernel reproduces bit-identically from the same bbox+10% formula.
     if (
-        driver_site_threshold > 0
-        and group_col is not None
+        group_col is not None
         and clip_rect is None
-        and max(r["cnt"] for r in aggs) <= driver_site_threshold
+        and fits(max(r["cnt"] for r in aggs), "voronoi.sites")
     ):
         return voronoi_of_group(
             s, group_col=gcol, lon_col=lon_col, lat_col=lat_col, id_col=id_col

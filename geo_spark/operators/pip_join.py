@@ -36,10 +36,23 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geo_spark.functions import bbox_contains_point, cell_encode_col
-from geo_spark.index.cells import cover_polygon, cover_polygons, pick_cover_res
+from geo_spark.index.cells import cover_polygons
+from geo_spark.operators.route import fetch_if_small
 
 # executor-side cache: broadcast id → {polygon_id: (ext, holes)}
 _BC_CACHE: dict = {}
+
+_POLY_COLS = ("polygon_id", "exterior", "interiors", "xmin", "ymin", "xmax", "ymax")
+
+
+def _ring(coords) -> np.ndarray:
+    return np.asarray([(c["x"], c["y"]) for c in coords], dtype=np.float64)
+
+
+def _poly_arrays(exterior, interiors):
+    """(exterior, [holes]) numpy rings from array<struct<x,y>> values — Spark
+    Rows on the driver, Arrow-converted arrays inside pandas batches."""
+    return _ring(exterior), [_ring(r) for r in (interiors if interiors is not None else [])]
 
 
 def _driver_cover_rows(poly_rows, res: int):
@@ -49,14 +62,7 @@ def _driver_cover_rows(poly_rows, res: int):
     job round-trip. The cover itself is the batched vectorized build
     (``cover_polygons``) — the per-polygon loop version cost ~0.4 ms/polygon
     of serial driver time, which dominated every admin-scale PIP query."""
-    polys = []
-    for r in poly_rows:
-        ext = np.asarray([(c["x"], c["y"]) for c in r["exterior"]], dtype=np.float64)
-        holes = [
-            np.asarray([(c["x"], c["y"]) for c in ring], dtype=np.float64)
-            for ring in (r["interiors"] or [])
-        ]
-        polys.append((ext, holes))
+    polys = [_poly_arrays(r["exterior"], r["interiors"]) for r in poly_rows]
     cells, pidx, fulls = cover_polygons(polys, res)
     rows = []
     for c, i, f in zip(cells.tolist(), pidx.tolist(), fulls.tolist()):
@@ -79,50 +85,29 @@ def _distributed_cover_rows(polygons: DataFrame, res: int):
     """Compute polygon cell covers on the executors, collect only the compact
     (cell, polygon_id, full, xmin, ymin, xmax, ymax) rows.
 
-    The per-polygon cover construction (cell walk + exact full/partial
-    classification) is the CPU-heavy prep step; at ~1M admin polygons a
-    driver loop serializes minutes of work, so it runs as ``mapInPandas``
-    over however many partitions the polygon table has. The collected rows
-    are compact (no geometry), sized like the broadcast relation itself.
+    At ~1M admin polygons even the batched cover build serializes minutes
+    of driver work, so it runs as ``mapInPandas`` — the same
+    ``cover_polygons`` pass over each Arrow batch — across however many
+    partitions the polygon table has. The collected rows are compact (no
+    geometry), sized like the broadcast relation itself.
     """
 
     def fn(it):
         for pdf in it:
-            cells_o, pids_o, fulls_o, bbs = [], [], [], []
-            for r in pdf.itertuples(index=False):
-                ext = np.asarray([(c["x"], c["y"]) for c in r.exterior], dtype=np.float64)
-                holes = [
-                    np.asarray([(c["x"], c["y"]) for c in ring], dtype=np.float64)
-                    for ring in (r.interiors if r.interiors is not None else [])
-                ]
-                cells, full = cover_polygon(ext, holes, res=res)
-                cells_o.append(cells.astype(np.int64))
-                fulls_o.append(full.astype(bool))
-                pids_o.append(np.full(len(cells), int(r.polygon_id), dtype=np.int64))
-                bbs.append((float(r.xmin), float(r.ymin), float(r.xmax), float(r.ymax), len(cells)))
-            if not cells_o:
-                continue
-            reps = [b[4] for b in bbs]
-            yield pd.DataFrame(
-                {
-                    "cell": np.concatenate(cells_o),
-                    "polygon_id": np.concatenate(pids_o),
-                    "full": np.concatenate(fulls_o),
-                    "xmin": np.repeat([b[0] for b in bbs], reps),
-                    "ymin": np.repeat([b[1] for b in bbs], reps),
-                    "xmax": np.repeat([b[2] for b in bbs], reps),
-                    "ymax": np.repeat([b[3] for b in bbs], reps),
-                }
-            )
+            polys = [_poly_arrays(e, h) for e, h in zip(pdf["exterior"], pdf["interiors"])]
+            cells, pidx, fulls = cover_polygons(polys, res)
+            out = pdf.iloc[pidx][["polygon_id", "xmin", "ymin", "xmax", "ymax"]]
+            yield out.reset_index(drop=True).assign(cell=cells, full=fulls)
 
     schema = (
-        "cell long, polygon_id long, full boolean, "
-        "xmin double, ymin double, xmax double, ymax double"
+        "polygon_id long, xmin double, ymin double, xmax double, ymax double, "
+        "cell long, full boolean"
     )
-    sdf = polygons.select(
-        "polygon_id", "exterior", "interiors", "xmin", "ymin", "xmax", "ymax"
-    ).mapInPandas(fn, schema=schema)
-    return [tuple(r) for r in sdf.collect()]
+    sdf = polygons.select(*_POLY_COLS).mapInPandas(fn, schema=schema)
+    return [
+        tuple(r)
+        for r in sdf.select("cell", "polygon_id", "full", "xmin", "ymin", "xmax", "ymax").collect()
+    ]
 
 
 def choose_res(bbox_rows, target_cells_per_polygon: int = 16, max_res: int = 14) -> int:
@@ -147,7 +132,6 @@ def pip_join_points_polygons(
     lon_col: str = "lon",
     lat_col: str = "lat",
     keep_position: bool = False,
-    refine: str = "pandas",
 ) -> DataFrame:
     """Join point rows to the polygons that contain them.
 
@@ -162,30 +146,14 @@ def pip_join_points_polygons(
     """
     spark = points.sparkSession
     # the polygon geometry must land on the driver regardless (broadcast
-    # refine is this operator's contract). Below the threshold, one fetch
-    # feeds both the cover build and the geometry table (a few hundred
+    # refine is this operator's contract). Within the route budget, one
+    # fetch feeds both the cover build and the geometry table (a few hundred
     # covers cost less than a Spark job round-trip). Above it, the cover
     # builds distributedly (mapInPandas) and the geometry STREAMS to the
     # driver via toLocalIterator — at the ~1M-polygon contract ceiling this
     # holds one copy of the geometry (the broadcast dict), not two (the
     # collected Row list plus the dict).
-    #
-    # Small-side fast path: a polygon table synthesized driver-side (e.g.
-    # sources.documents.synth_admin_polygons) tags itself with the local row
-    # list it was built from; using it directly skips the count + collect
-    # jobs entirely — two scheduler round-trips that otherwise dominate the
-    # fixed cost of every admin-scale PIP query.
-    driver_cover_threshold = 20_000
-    poly_rows = getattr(polygons, "_geo_spark_local_rows", None)
-    if poly_rows is None:
-        # one job replaces the old count() + collect() pair: fetch at most
-        # threshold+1 rows — fewer means the driver path with rows in hand,
-        # more means the distributed path (the fetched rows are discarded)
-        fetched = polygons.select(
-            "polygon_id", "exterior", "interiors", "xmin", "ymin", "xmax", "ymax"
-        ).take(driver_cover_threshold + 1)
-        if len(fetched) <= driver_cover_threshold:
-            poly_rows = fetched
+    poly_rows = fetch_if_small(polygons.select(*_POLY_COLS), "pip_join.polygons")
     if poly_rows is not None:
         if res is None:
             res = choose_res(poly_rows)
@@ -199,33 +167,11 @@ def pip_join_points_polygons(
         poly_rows = polygons.select(
             "polygon_id", "exterior", "interiors"
         ).toLocalIterator(prefetchPartitions=True)
-    if refine == "sql":
-        # Catalyst-native refine: partial cells carry the polygon geometry
-        # through the broadcast; full cells carry NULL (no geometry needed).
-        geo_by_pid = {
-            int(r["polygon_id"]): (
-                [[c["x"], c["y"]] for c in r["exterior"]],
-                [[[c["x"], c["y"]] for c in ring] for ring in (r["interiors"] or [])],
-            )
-            for r in poly_rows
-        }
-        sql_rows = []
-        for cell, pid, full, x0, y0, x1, y1 in cover_rows:
-            ext, holes = (None, None) if full else geo_by_pid[pid]
-            sql_rows.append((cell, pid, full, x0, y0, x1, y1, ext, holes))
-        cover_df = spark.createDataFrame(
-            sql_rows,
-            schema="cell long, polygon_id long, full boolean, "
-            "xmin double, ymin double, xmax double, ymax double, "
-            "exterior array<struct<x:double,y:double>>, "
-            "interiors array<array<struct<x:double,y:double>>>",
-        )
-    else:
-        cover_df = spark.createDataFrame(
-            cover_rows,
-            schema="cell long, polygon_id long, full boolean, "
-            "xmin double, ymin double, xmax double, ymax double",
-        )
+    cover_df = spark.createDataFrame(
+        cover_rows,
+        schema="cell long, polygon_id long, full boolean, "
+        "xmin double, ymin double, xmax double, ymax double",
+    )
 
     pts = points.withColumn("_cell", cell_encode_col(lon_col, lat_col, res))
     cand = pts.join(F.broadcast(cover_df), pts["_cell"] == cover_df["cell"], "inner")
@@ -233,73 +179,47 @@ def pip_join_points_polygons(
         bbox_contains_point("xmin", "ymin", "xmax", "ymax", lon_col, lat_col)
     )
 
-    drop = ["_cell", "cell", "full", "xmin", "ymin", "xmax", "ymax"]
+    geoms = {
+        int(r["polygon_id"]): _poly_arrays(r["exterior"], r["interiors"])
+        for r in poly_rows
+    }
+    bc = spark.sparkContext.broadcast(geoms)
+    bc_key = f"pip:{id(bc)}:{len(geoms)}"
 
-    if refine == "sql":
-        # full-cell shortcut stays JVM-side: NULL geometry means "interior"
-        from geo_spark.functions import polygon_position_sql
+    @F.pandas_udf(T.ByteType())
+    def position_udf(
+        polygon_id: pd.Series, lon: pd.Series, lat: pd.Series, full: pd.Series
+    ) -> pd.Series:
+        # deserialize the broadcast polygon table once per executor process
+        table = _BC_CACHE.get(bc_key)
+        if table is None:
+            table = bc.value
+            _BC_CACHE[bc_key] = table
+        from geo_spark.kernels.predicates import polygon_position
 
-        cand = cand.withColumn(
-            "position",
-            F.when(F.col("full"), F.lit(1).cast("byte")).otherwise(
-                polygon_position_sql(
-                    F.col(lon_col), F.col(lat_col), "exterior", "interiors"
-                )
-            ),
-        )
-        drop += ["exterior", "interiors"]
-    elif refine == "pandas":
-        geoms = {
-            int(r["polygon_id"]): (
-                np.asarray([(c["x"], c["y"]) for c in r["exterior"]], dtype=np.float64),
-                [
-                    np.asarray([(c["x"], c["y"]) for c in ring], dtype=np.float64)
-                    for ring in (r["interiors"] or [])
-                ],
-            )
-            for r in poly_rows
-        }
-        bc = spark.sparkContext.broadcast(geoms)
-        bc_key = f"pip:{id(bc)}:{len(geoms)}"
+        pid = polygon_id.to_numpy()
+        lo = lon.to_numpy(dtype=np.float64)
+        la = lat.to_numpy(dtype=np.float64)
+        is_full = full.to_numpy(dtype=bool)
+        out = np.ones(len(pid), dtype=np.int8)  # full cells are Inside
+        todo = ~is_full
+        if todo.any():
+            pid_t = pid[todo]
+            idx_t = np.flatnonzero(todo)
+            for p in np.unique(pid_t):
+                mask = idx_t[pid_t == p]
+                ext, holes = table[int(p)]
+                out[mask] = polygon_position(lo[mask], la[mask], ext, holes)
+        return pd.Series(out)
 
-        @F.pandas_udf(T.ByteType())
-        def position_udf(
-            polygon_id: pd.Series, lon: pd.Series, lat: pd.Series, full: pd.Series
-        ) -> pd.Series:
-            # deserialize the broadcast polygon table once per executor process
-            table = _BC_CACHE.get(bc_key)
-            if table is None:
-                table = bc.value
-                _BC_CACHE[bc_key] = table
-            from geo_spark.kernels.predicates import polygon_position
-
-            pid = polygon_id.to_numpy()
-            lo = lon.to_numpy(dtype=np.float64)
-            la = lat.to_numpy(dtype=np.float64)
-            is_full = full.to_numpy(dtype=bool)
-            out = np.ones(len(pid), dtype=np.int8)  # full cells are Inside
-            todo = ~is_full
-            if todo.any():
-                pid_t = pid[todo]
-                idx_t = np.flatnonzero(todo)
-                for p in np.unique(pid_t):
-                    mask = idx_t[pid_t == p]
-                    ext, holes = table[int(p)]
-                    out[mask] = polygon_position(lo[mask], la[mask], ext, holes)
-            return pd.Series(out)
-
-        # full-cell shortcut: one pass — the UDF receives the `full` flag and
-        # masks out the winding kernel for interior cells (Arrow still ships
-        # the row, ~25 bytes, but no Python math runs for it). A filter/union
-        # split would re-scan the upstream source twice.
-        cand = cand.withColumn(
-            "position",
-            position_udf(
-                F.col("polygon_id"), F.col(lon_col), F.col(lat_col), F.col("full")
-            ),
-        )
-    else:
-        raise ValueError(f"unknown refine: {refine}")
+    # full-cell shortcut: one pass — the UDF receives the `full` flag and
+    # masks out the winding kernel for interior cells (Arrow still ships
+    # the row, ~25 bytes, but no Python math runs for it). A filter/union
+    # split would re-scan the upstream source twice.
+    cand = cand.withColumn(
+        "position",
+        position_udf(F.col("polygon_id"), F.col(lon_col), F.col(lat_col), F.col("full")),
+    )
 
     if predicate == "contains":
         cand = cand.filter(F.col("position") == 1)
@@ -308,6 +228,7 @@ def pip_join_points_polygons(
     elif predicate != "position":
         raise ValueError(f"unknown predicate: {predicate}")
 
+    drop = ["_cell", "cell", "full", "xmin", "ymin", "xmax", "ymax"]
     if not keep_position and predicate != "position":
         drop.append("position")
     return cand.drop(*drop)

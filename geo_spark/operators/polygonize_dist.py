@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geo_spark.operators.route import fetch_if_small, fits
+
 _RING_T = "array<struct<x:double,y:double>>"
 
 
@@ -140,7 +142,7 @@ def _peel_dangles(seg: DataFrame, max_rounds: int = 64) -> DataFrame:
             converged = True
             break
         n = n2
-    if not converged:
+    if not converged and n > 0:
         # a dangle chain longer than ~2*max_rounds links would leave
         # residual degree-1 edges whose twin-bounce successors inject
         # zero-area spikes into face rings (diverging from JTS Polygonizer
@@ -213,10 +215,11 @@ def _label_cycles_driver(succ: DataFrame) -> DataFrame:
     """Small-side cycle labeling: collect the (id, succ) permutation and
     walk it in one Python pass.
 
-    Same adaptive pattern as DBSCAN's ``driver_merge_threshold`` / the
-    pip-join broadcast contract: the successor table is two longs per
-    half-edge, so below the threshold one collect beats ~⌈log₂ n⌉ rounds
-    of Catalyst-planned self-joins (planning alone costs ~0.4 s/round).
+    Same adaptive pattern as DBSCAN's witness-edge merge / the pip-join
+    broadcast contract: the successor table is two longs per half-edge, so
+    within the ``polygonize.half_edges`` budget one collect beats
+    ~⌈log₂ n⌉ rounds of Catalyst-planned self-joins (planning alone costs
+    ~0.4 s/round).
     The doubling path below is the 100 TB shape and stays parity-tested.
     """
     rows = succ.collect()
@@ -386,33 +389,25 @@ def polygonize_distributed(
     max_bridge_rounds: int = 8,
     max_ring_len: int | None = None,
     parallelism: int | None = None,
-    driver_label_threshold: int = 200_000,
-    driver_face_threshold: int = 20_000,
 ) -> DataFrame:
     """Segments table (x1,y1,x2,y2 — noded) → faces table
     (exterior, interiors, area), JTS-Polygonizer semantics.
 
-    ``driver_label_threshold``: below this many half-edges the cycle
-    labeling collects the two-long (id, succ) permutation to the driver
-    (one job) instead of ⌈log₂ n⌉ self-join rounds whose Catalyst
-    planning dominates at small scale; 0 forces the distributed path.
-
-    ``driver_face_threshold``: below this many input segments the ENTIRE
-    pipeline runs on the driver via the per-row kernel (the same adaptive
-    pattern, one level up): one take() + in-process assembly beats the
-    ~10 sequential micro-stages whose scheduling dominates at small n.
-    0 forces the distributed pipeline (tests use this to keep both paths
-    parity-gated). See the module docstring for the 100 TB plan.
+    Two small-side routes (budgets in ``operators.route``):
+    ``polygonize.segments`` — within it the ENTIRE pipeline runs on the
+    driver via the per-row kernel: one fetch + in-process assembly beats
+    the ~10 sequential micro-stages whose scheduling dominates at small n;
+    ``polygonize.half_edges`` — within it the dangle peel and the cycle
+    labeling collect to the driver (one job each) instead of a fixpoint /
+    ⌈log₂ n⌉ self-join rounds whose Catalyst planning dominates at small
+    scale. See the module docstring for the 100 TB plan.
     """
     if max_bridge_rounds < 1:
         raise ValueError("max_bridge_rounds must be >= 1")
     spark = segments.sparkSession
-    if driver_face_threshold > 0:
-        fetched = segments.select("x1", "y1", "x2", "y2").take(
-            driver_face_threshold + 1
-        )
-        if len(fetched) <= driver_face_threshold:
-            return _polygonize_driver(spark, fetched)
+    fetched = fetch_if_small(segments.select("x1", "y1", "x2", "y2"), "polygonize.segments")
+    if fetched is not None:
+        return _polygonize_driver(spark, fetched)
     if parallelism is None:
         parallelism = spark.sparkContext.defaultParallelism
     seg = _canon(segments).repartition(parallelism).localCheckpoint(eager=True)
@@ -421,7 +416,7 @@ def polygonize_distributed(
     for _ in range(max_bridge_rounds):
         # n_seg is refreshed after each bridge-removal round below, so the
         # driver-vs-distributed choice tracks the shrinking table
-        if 2 * n_seg <= driver_label_threshold:
+        if fits(2 * n_seg, "polygonize.half_edges"):
             seg = _peel_dangles_driver(seg)
         else:
             seg = _peel_dangles(seg)
@@ -436,7 +431,7 @@ def polygonize_distributed(
         n_he = he.count()
         _assert_no_id_collisions(he, n_he)
         succ = _successors(he).localCheckpoint(eager=False)
-        if n_he <= driver_label_threshold:
+        if fits(n_he, "polygonize.half_edges"):
             labels = _label_cycles_driver(succ)
         else:
             labels = _label_cycles(succ, n_he, max_ring_len)

@@ -14,6 +14,26 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap sized to the host: min(20g, ~40% of MemTotal).
+
+    The heap is pinned and pre-touched below, so it must fit in physical
+    memory next to the Python workers; 20g (enough for a 10x-scale bench
+    mirror without GCLocker allocation stalls) is the ceiling on large
+    hosts. Falls back to 20g where /proc/meminfo is unreadable.
+    """
+    cap_mb = 20 * 1024
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{max(512, min(cap_mb, total_mb * 2 // 5))}m"
+    except OSError:
+        pass
+    return f"{cap_mb}m"
+
+
 def get_spark(
     app_name: str = "geo_spark",
     master: str | None = None,
@@ -24,7 +44,7 @@ def get_spark(
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
-    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "20g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
     # Pin and pre-fault the driver heap (-Xms=-Xmx + AlwaysPreTouch): the
     # production-standard JVM setting (executors pin their heap the same
     # way). Without it, first-touch page faults spread across the heap as
@@ -32,9 +52,9 @@ def get_spark(
     # multi-second whole-machine sys-time storms (~90% system CPU, all
     # cores spinning in mmap paths) hitting queries at random — measured
     # 5-30x inflation of individual bench samples. Pre-touching moves that
-    # cost to one untimed session startup (~1.7 s/GB here; the 20g default
-    # clears a 10x-scale bench mirror without GCLocker allocation stalls —
-    # override with SPARK_DRIVER_MEMORY for larger driver-side state).
+    # cost to one untimed session startup (~1.7 s/GB; the default heap is
+    # sized to the host by default_driver_memory — override with
+    # SPARK_DRIVER_MEMORY for larger driver-side state).
     # -Xlog:...:stderr: JVM unified-logging warnings default to STDOUT and
     # would corrupt the bench CLI's one-JSON-line stdout contract.
     driver_java_opts = os.environ.get(

@@ -168,11 +168,7 @@ def synth_admin_polygons(
         "interiors array<array<struct<x:double,y:double>>>, "
         "xmin double, ymin double, xmax double, ymax double"
     )
-    df = spark.createDataFrame(rows, schema=schema)
-    # handshake with operators.pip_join: the rows are already on the driver,
-    # so the broadcast-PIP small side can skip its count/collect jobs
-    df._geo_spark_local_rows = rows
-    return df
+    return spark.createDataFrame(rows, schema=schema)
 
 
 def polygons_to_numpy(poly_rows) -> dict:

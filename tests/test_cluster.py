@@ -97,7 +97,7 @@ def test_kmeans_wrapper(spark):
     assert len(ca) == 1 and len(cb) == 1 and ca != cb
 
 
-def test_distributed_merge_path_matches_driver(spark):
+def test_distributed_merge_path_matches_driver(spark, route_budget):
     # a dense snake spanning ~14 cell columns (epsilon 0.25 → res cells 1.4°
     # wide): the cluster graph is a long chain, so min-label propagation
     # needs several pointer-jump rounds — plus two separate blobs and noise.
@@ -118,11 +118,10 @@ def test_distributed_merge_path_matches_driver(spark):
         r["id"]: r["cluster"]
         for r in dbscan(df, epsilon=0.25, min_samples=3, id_col="id").collect()
     }
+    route_budget("dbscan.edges", 0)
     via_distributed = {
         r["id"]: r["cluster"]
-        for r in dbscan(
-            df, epsilon=0.25, min_samples=3, id_col="id", driver_merge_threshold=0
-        ).collect()
+        for r in dbscan(df, epsilon=0.25, min_samples=3, id_col="id").collect()
     }
     assert via_distributed == via_driver  # identical ids, not just partitions
     # the snake must be one cluster on both paths

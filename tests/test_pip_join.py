@@ -4,7 +4,12 @@ Correctness gates:
 - the join result equals a brute-force numpy sweep (every point × every
   polygon with the exact kernel);
 - the text byte-identity invariant survives the pipeline;
-- hole semantics: points in a polygon's hole are excluded.
+- hole semantics: points in a polygon's hole are excluded, and hole and
+  shell edges are boundary positions.
+
+The join and hole tests run both small-side routes: the driver cover build
+(polygons within the ``pip_join.polygons`` budget) and the distributed cover
+build with the streamed geometry table (budget 0).
 """
 
 import numpy as np
@@ -20,6 +25,8 @@ from geo_spark.sources.documents import (
 )
 
 N_DOCS = 3000
+
+both_routes = pytest.mark.parametrize("budget", [20_000, 0], ids=["driver", "distributed"])
 
 
 @pytest.fixture(scope="module")
@@ -57,7 +64,9 @@ def test_text_byte_identity(docs, spark):
     assert joined.filter(F.col("h") != F.col("h2")).count() == 0
 
 
-def test_pip_join_matches_bruteforce(spark, docs, polys):
+@both_routes
+def test_pip_join_matches_bruteforce(spark, docs, polys, route_budget, budget):
+    route_budget("pip_join.polygons", budget)
     pts = extract_points(docs).cache()
     result = (
         pip_join_points_polygons(pts, polys, predicate="contains")
@@ -88,25 +97,29 @@ def test_pip_join_matches_bruteforce(spark, docs, polys):
     assert sum(got.values()) > 0
 
 
-def test_pip_join_hole_semantics(spark):
+@both_routes
+def test_pip_join_hole_semantics(spark, route_budget, budget):
     # one polygon with a hole; points inside hole must be excluded
-    from geo_spark.sources.documents import synth_admin_polygons
-
-    polys = synth_admin_polygons(spark, grid_deg=10.0)
+    route_budget("pip_join.polygons", budget)
     # polygon_id 0 covers [-180,-170]x[-90,-80] and has a hole at 40% inset
+    one = synth_admin_polygons(spark, grid_deg=10.0).filter("polygon_id = 0")
     pts = spark.createDataFrame(
         [
             ("in_ring", -179.0, -89.0),     # inside polygon, outside hole
             ("in_hole", -175.0, -85.0),     # center → inside the hole
+            ("on_hole_edge", -176.0, -85.0),
+            ("on_outer_edge", -180.0, -85.0),
             ("outside", -100.0, 0.0),
         ],
         schema="url string, lon double, lat double",
     )
-    got = {
-        r["url"]: r["polygon_id"]
-        for r in pip_join_points_polygons(pts, polys.filter("polygon_id = 0")).collect()
-    }
+    got = {r["url"]: r["polygon_id"] for r in pip_join_points_polygons(pts, one).collect()}
     assert got == {"in_ring": 0}
+    pos = {
+        r["url"]: r["position"]
+        for r in pip_join_points_polygons(pts, one, predicate="position").collect()
+    }
+    assert pos == {"in_ring": 1, "in_hole": -1, "on_hole_edge": 0, "on_outer_edge": 0}
 
 
 def test_pip_join_intersects_includes_boundary(spark):
@@ -120,46 +133,6 @@ def test_pip_join_intersects_includes_boundary(spark):
     covers = {r["url"] for r in pip_join_points_polygons(pts, one, "covers").collect()}
     assert contains == {"inside"}
     assert covers == {"corner", "edge", "inside"}
-
-
-def test_sql_refine_matches_pandas_refine(spark, docs, polys):
-    pts = extract_points(docs)
-    a = (
-        pip_join_points_polygons(pts, polys, predicate="contains", refine="pandas")
-        .groupBy("polygon_id").count().collect()
-    )
-    b = (
-        pip_join_points_polygons(pts, polys, predicate="contains", refine="sql")
-        .groupBy("polygon_id").count().collect()
-    )
-    assert {r["polygon_id"]: r["count"] for r in a} == {
-        r["polygon_id"]: r["count"] for r in b
-    }
-
-
-def test_sql_refine_boundary_and_holes(spark):
-    polys = synth_admin_polygons(spark, grid_deg=10.0)
-    pts = spark.createDataFrame(
-        [
-            ("in_ring", -179.0, -89.0),
-            ("in_hole", -175.0, -85.0),
-            ("on_hole_edge", -176.0, -85.0),
-            ("on_outer_edge", -180.0, -85.0),
-            ("outside", -100.0, 0.0),
-        ],
-        schema="url string, lon double, lat double",
-    )
-    one = polys.filter("polygon_id = 0")
-    got = {
-        r["url"]: r["position"]
-        for r in pip_join_points_polygons(
-            pts, one, predicate="position", refine="sql"
-        ).collect()
-    }
-    assert got["in_ring"] == 1
-    assert got["in_hole"] == -1
-    assert got["on_hole_edge"] == 0
-    assert got["on_outer_edge"] == 0
 
 
 def test_cover_polygons_batch_matches_per_polygon():

@@ -2,6 +2,8 @@
 per-row kernel (kernels/polygonize.py — JTS Polygonizer semantics) on
 multi-component linework with dangles, bridges, and holes."""
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -60,18 +62,19 @@ def _grid_segments(cols, rows, x0=0.0, y0=0.0):
     return segs
 
 
-def test_grid_mosaic_parity(spark):
-    # driver_face_threshold=0 forces the full distributed pipeline (the
-    # default now routes small inputs through the driver-side kernel)
+def test_grid_mosaic_parity(spark, route_budget):
+    # a zero "polygonize.segments" budget forces the full distributed
+    # pipeline (the default routes small inputs through the driver kernel)
+    route_budget("polygonize.segments", 0)
     segs = _grid_segments(4, 3)
-    got = _dist_result(spark, segs, driver_face_threshold=0)
+    got = _dist_result(spark, segs)
     exp = _kernel_result(segs)
     assert len(exp) == 12
     assert got == exp
 
 
 def test_grid_mosaic_parity_driver_face_path(spark):
-    # the small-input whole-pipeline driver path (default thresholds) must
+    # the small-input whole-pipeline driver path (default budgets) must
     # emit the same faces as the distributed pipeline / kernel
     segs = _grid_segments(4, 3)
     got = _dist_result(spark, segs)
@@ -80,26 +83,26 @@ def test_grid_mosaic_parity_driver_face_path(spark):
     assert got == exp
 
 
-def test_grid_mosaic_parity_distributed_labeling(spark):
-    # driver_label_threshold=0 forces the pointer-doubling path (the 100 TB
-    # shape); results must match the driver-side labeling exactly
+def test_grid_mosaic_parity_distributed_labeling(spark, route_budget):
+    # a zero "polygonize.half_edges" budget forces the pointer-doubling path
+    # (the 100 TB shape); results must match the driver-side labeling exactly
+    route_budget("polygonize.segments", 0)
+    route_budget("polygonize.half_edges", 0)
     segs = _grid_segments(3, 3)
-    got = _dist_result(
-        spark, segs, driver_label_threshold=0, driver_face_threshold=0,
-        max_ring_len=64,
-    )
+    got = _dist_result(spark, segs, max_ring_len=64)
     exp = _kernel_result(segs)
     assert len(exp) == 9
     assert got == exp
 
 
-def test_dangles_bridges_holes_parity_both_paths(spark):
+def test_dangles_bridges_holes_parity_both_paths(spark, route_budget):
     segs = _dangles_bridges_holes_segs()
     exp = _kernel_result(segs)
     assert len(exp) == 4
     assert any(h for _, h in exp)  # one polygon has a hole
     assert _dist_result(spark, segs) == exp  # driver face path
-    assert _dist_result(spark, segs, driver_face_threshold=0) == exp
+    route_budget("polygonize.segments", 0)
+    assert _dist_result(spark, segs) == exp
 
 
 def _dangles_bridges_holes_segs():
@@ -147,3 +150,21 @@ def test_empty_and_all_dangles(spark):
         "x1 double, y1 double, x2 double, y2 double",
     )
     assert polygonize_distributed(df).count() == 0
+
+
+@pytest.mark.parametrize("n_links", [6, 7])
+def test_peel_dangles_finishing_in_last_round_converges(spark, n_links):
+    # each round peels both end links of a pure dangle chain, so
+    # ceil(L/2) rounds remove all L links; a peel that empties the table in
+    # its last permitted round has converged and must not raise
+    from geo_spark.operators.polygonize_dist import _peel_dangles
+
+    seg = spark.createDataFrame(
+        [(float(i), 0.0, float(i + 1), 0.0) for i in range(n_links)],
+        "ax double, ay double, bx double, by double",
+    )
+    rounds = math.ceil(n_links / 2)
+    assert _peel_dangles(seg, max_rounds=rounds).count() == 0
+    # one round fewer leaves links behind: still a loud failure
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _peel_dangles(seg, max_rounds=rounds - 1)

@@ -26,7 +26,8 @@ def _same_ring(a, b, atol=1e-9):
     )
 
 
-def test_distributed_matches_single_task(spark):
+def test_distributed_matches_single_task(spark, route_budget):
+    route_budget("voronoi.sites", 0)
     from geo_spark.operators.geometry2 import voronoi_distributed, voronoi_of_group
 
     rng = np.random.RandomState(11)
@@ -36,7 +37,7 @@ def test_distributed_matches_single_task(spark):
         [(int(i), float(x), float(y)) for i, (x, y) in enumerate(pts)],
         "site_id long, lon double, lat double",
     )
-    got = _rings(voronoi_distributed(df, res=4, driver_site_threshold=0).collect())
+    got = _rings(voronoi_distributed(df, res=4).collect())
     exp = _rings(
         voronoi_of_group(
             df.withColumn("group_id", F.lit(0)), id_col="site_id"
@@ -46,7 +47,8 @@ def test_distributed_matches_single_task(spark):
     assert all(_same_ring(got[k], exp[k]) for k in exp)
 
 
-def test_distributed_grouped(spark):
+def test_distributed_grouped(spark, route_budget):
+    route_budget("voronoi.sites", 0)
     from geo_spark.operators.geometry2 import voronoi_distributed, voronoi_of_group
 
     rng = np.random.RandomState(3)
@@ -57,8 +59,7 @@ def test_distributed_grouped(spark):
         "site_id long, lon double, lat double, grp long",
     )
     got = _rings(
-        voronoi_distributed(df, id_col="site_id", group_col="grp", res=3,
-                            driver_site_threshold=0).collect(),
+        voronoi_distributed(df, id_col="site_id", group_col="grp", res=3).collect(),
         key=lambda r: (r["grp"], r["site_id"]),
     )
     exp = _rings(
@@ -71,21 +72,23 @@ def test_distributed_grouped(spark):
     assert all(_same_ring(got[k], exp[k]) for k in exp)
 
 
-def test_distributed_degenerate_inputs(spark):
+def test_distributed_degenerate_inputs(spark, route_budget):
+    route_budget("voronoi.sites", 0)
     from geo_spark.operators.geometry2 import voronoi_distributed
 
     # duplicates + collinear sites: every site still gets a row; duplicate
     # sites get identical cells (degenerate zero-normal bisector is a no-op)
     rows = [(0, 5.0, 5.0), (1, 5.0, 5.0), (2, 10.0, 5.0), (3, 15.0, 5.0), (4, 20.0, 5.0)]
     df = spark.createDataFrame(rows, "site_id long, lon double, lat double")
-    out = {r["site_id"]: r["cell_ring"] for r in voronoi_distributed(df, res=2, driver_site_threshold=0).collect()}
+    out = {r["site_id"]: r["cell_ring"] for r in voronoi_distributed(df, res=2).collect()}
     assert set(out) == {0, 1, 2, 3, 4}
     a0 = np.array([(c["x"], c["y"]) for c in out[0]])
     a1 = np.array([(c["x"], c["y"]) for c in out[1]])
     assert np.array_equal(a0, a1)
 
 
-def test_distributed_plan_is_multi_task(spark):
+def test_distributed_plan_is_multi_task(spark, route_budget):
+    route_budget("voronoi.sites", 0)
     # the scale property itself: pass 1 runs as a multi-partition
     # applyInPandas keyed by (group, tile) — never a single global group
     from geo_spark.operators.geometry2 import voronoi_distributed
@@ -109,11 +112,12 @@ def test_distributed_plan_is_multi_task(spark):
         _with_halo_cells(df, "lon", "lat", h, res).select("_cell").distinct().count()
     )
     assert n_tiles >= 8, n_tiles
-    out = voronoi_distributed(df, driver_site_threshold=0)
+    out = voronoi_distributed(df)
     assert out.count() == n
 
 
-def test_distributed_string_group_keys(spark):
+def test_distributed_string_group_keys(spark, route_budget):
+    route_budget("voronoi.sites", 0)
     # Round-5 ADVICE: the applyInPandas schemas hardcoded long group/id
     # types; non-integer group keys (string region names) must work and
     # match the per-group single-task result.
@@ -130,8 +134,7 @@ def test_distributed_string_group_keys(spark):
         ],
         "site_id long, lon double, lat double, region string",
     )
-    got = voronoi_distributed(df, id_col="site_id", group_col="region", res=3,
-                              driver_site_threshold=0)
+    got = voronoi_distributed(df, id_col="site_id", group_col="region", res=3)
     assert dict(got.dtypes)["region"] == "string"
     gotr = _rings(got.collect(), key=lambda r: (r["region"], r["site_id"]))
     exp = _rings(
@@ -144,8 +147,8 @@ def test_distributed_string_group_keys(spark):
     assert all(_same_ring(gotr[k], exp[k]) for k in exp)
 
 
-def test_driver_site_path_matches_distributed(spark):
-    # Round-6 optimization: below driver_site_threshold the whole
+def test_driver_site_path_matches_distributed(spark, route_budget):
+    # Round-6 optimization: within the "voronoi.sites" budget the whole
     # construction runs on the driver via the same local kernel. Both paths
     # must emit the same rings (up to rotation), grouped and ungrouped,
     # including degenerate duplicate sites.
@@ -160,8 +163,7 @@ def test_driver_site_path_matches_distributed(spark):
     kw = dict(id_col="site_id", group_col="grp", res=3)
     key = lambda r: (r["grp"], r["site_id"])
     drv = _rings(voronoi_distributed(df, **kw).collect(), key=key)
-    dist = _rings(
-        voronoi_distributed(df, driver_site_threshold=0, **kw).collect(), key=key
-    )
+    route_budget("voronoi.sites", 0)
+    dist = _rings(voronoi_distributed(df, **kw).collect(), key=key)
     assert set(drv) == set(dist)
     assert all(_same_ring(drv[k], dist[k]) for k in dist)
