@@ -158,44 +158,24 @@ def polygon_wkb_roundtrip(ext_col, ints_col):
     """
     from pyspark.sql import functions as F
 
-    @F.pandas_udf("struct<n_bytes:int,n_vertices:int,sum_x:double,sum_y:double,ok:boolean>")
-    def udf(exts: pd.Series, ints: pd.Series) -> pd.DataFrame:
-        nb, nv, sx, sy, ok = [], [], [], [], []
-        for i in range(len(exts)):
-            ext = np.asarray([(c["x"], c["y"]) for c in exts.iloc[i]], dtype=np.float64)
-            ivals = ints.iloc[i]
-            if ivals is None:
-                ivals = []
-            holes = [
-                np.asarray([(c["x"], c["y"]) for c in ring], dtype=np.float64)
-                for ring in ivals
-            ]
-            g = ("Polygon", [ext] + holes)
-            buf = to_wkb(g)
-            kind, rings = parse_wkb(buf)
-            allc = np.vstack(rings) if rings else np.empty((0, 2))
-            same = (
-                kind == "Polygon"
-                and len(rings) == 1 + len(holes)
-                and all(
-                    a.shape == b.shape and (a == b).all()
-                    for a, b in zip(rings, [ext] + holes)
-                )
-            )
-            nb.append(len(buf))
-            nv.append(len(allc))
-            sx.append(float(allc[:, 0].sum()))
-            sy.append(float(allc[:, 1].sum()))
-            ok.append(bool(same))
-        return pd.DataFrame(
-            {"n_bytes": nb, "n_vertices": nv, "sum_x": sx, "sum_y": sy, "ok": ok}
-        )
+    from geo_spark.operators import geom_udf as gu
 
-    from pyspark.sql import functions as F
+    def roundtrip(ext, holes):
+        buf = to_wkb(("Polygon", [ext] + holes))
+        kind, rings = parse_wkb(buf)
+        allc = np.vstack(rings) if rings else np.empty((0, 2))
+        same = (
+            kind == "Polygon"
+            and len(rings) == 1 + len(holes)
+            and all(a.shape == b.shape and (a == b).all() for a, b in zip(rings, [ext] + holes))
+        )
+        return len(buf), len(allc), float(allc[:, 0].sum()), float(allc[:, 1].sum()), bool(same)
 
     e = ext_col if not isinstance(ext_col, str) else F.col(ext_col)
     h = ints_col if not isinstance(ints_col, str) else F.col(ints_col)
-    return udf(e, h)
+    return gu.geom_udf(
+        roundtrip, "struct<n_bytes:int,n_vertices:int,sum_x:double,sum_y:double,ok:boolean>"
+    )(gu.polygon(e, h))
 
 
 def polygon_from_wkb(wkb_col):

@@ -64,6 +64,18 @@ def polygon_unsigned_area(exterior, interiors=()) -> float:
     return abs(polygon_signed_area(exterior, interiors))
 
 
+def pieces_area(pieces) -> float:
+    """Unsigned area of (exterior, holes) pieces — a multipolygon: Σ over
+    pieces of |exterior| − Σ|holes| (``area.rs`` MultiPolygon), accumulated
+    piece by piece, exterior before its holes."""
+    total = 0.0
+    for ext, holes in pieces:
+        total += abs(ring_signed_area(ext))
+        for h in holes:
+            total -= abs(ring_signed_area(h))
+    return total
+
+
 def ring_centroid(ring) -> tuple[float, float] | None:
     """Area-weighted centroid of one closed ring (shifted for stability)."""
     ring = _ring_arr(ring)

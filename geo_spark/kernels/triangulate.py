@@ -688,6 +688,44 @@ def constrained_delaunay(points, constraints, base_tris=None):
     return [tuple(int(x) for x in t) for t in tris]
 
 
+def _spade_input(rings):
+    """Deduplicated vertices (first occurrence order; a ring's closing
+    vertex dropped) and the ring edges as constraint index pairs."""
+    seen = {}
+    pts = []
+    constraints = []
+    for r in rings:
+        r = np.asarray(r, dtype=np.float64)
+        idxs = []
+        for x, y in r[:-1] if len(r) and (r[0] == r[-1]).all() else r:
+            key = (float(x), float(y))
+            if key not in seen:
+                seen[key] = len(pts)
+                pts.append(key)
+            idxs.append(seen[key])
+        m = len(idxs)
+        for k in range(m):
+            a, b = idxs[k], idxs[(k + 1) % m]
+            if a != b:
+                constraints.append((a, b))
+    return np.asarray(pts, dtype=np.float64), constraints
+
+
+def _inside_triangles(pts, tris, rings):
+    """Triangles whose centroid lies strictly inside the polygon."""
+    from geo_spark.kernels.predicates import polygon_position
+
+    ext = np.asarray(rings[0], dtype=np.float64)
+    holes = [np.asarray(h, dtype=np.float64) for h in rings[1:]]
+    keep = []
+    for t in tris:
+        cx = pts[list(t), 0].mean()
+        cy = pts[list(t), 1].mean()
+        if int(polygon_position([cx], [cy], ext, holes)[0]) == 1:
+            keep.append(t)
+    return keep
+
+
 def spade_triangulation(rings, mode: str = "unconstrained"):
     """(points, triangles) per triangulate_spade.rs semantics over a polygon
     given as [exterior, hole, ...] closed rings.
@@ -696,39 +734,31 @@ def spade_triangulation(rings, mode: str = "unconstrained"):
     (constrained, includes triangles outside a non-convex shell / inside
     holes) | 'constrained' (only triangles inside the polygon).
     """
-    rings = [np.asarray(r, dtype=np.float64) for r in rings]
-    seen = {}
-    pts = []
-    ring_idx = []
-    for r in rings:
-        idxs = []
-        for x, y in r[:-1] if len(r) and (r[0] == r[-1]).all() else r:
-            key = (float(x), float(y))
-            if key not in seen:
-                seen[key] = len(pts)
-                pts.append(key)
-            idxs.append(seen[key])
-        ring_idx.append(idxs)
-    pts_arr = np.asarray(pts, dtype=np.float64)
+    pts, constraints = _spade_input(rings)
     if mode == "unconstrained":
-        return pts_arr, delaunay(pts_arr)
-    constraints = []
-    for idxs in ring_idx:
-        m = len(idxs)
-        for k in range(m):
-            a, b = idxs[k], idxs[(k + 1) % m]
-            if a != b:
-                constraints.append((a, b))
-    tris = constrained_delaunay(pts_arr, constraints)
+        return pts, delaunay(pts)
+    tris = constrained_delaunay(pts, constraints)
     if mode == "outer":
-        return pts_arr, tris
-    from geo_spark.kernels.predicates import polygon_position
+        return pts, tris
+    return pts, _inside_triangles(pts, tris, rings)
 
-    ext, holes = rings[0], rings[1:]
-    keep = []
-    for t in tris:
-        cx = pts_arr[list(t), 0].mean()
-        cy = pts_arr[list(t), 1].mean()
-        if int(polygon_position([cx], [cy], ext, holes)[0]) == 1:
-            keep.append(t)
-    return pts_arr, keep
+
+def spade_triangulation_all(rings):
+    """(points, unconstrained, outer, constrained) triangles — all three
+    ``spade_triangulation`` modes from one Delaunay: the CDT starts from the
+    unconstrained triangulation instead of recomputing it."""
+    pts, constraints = _spade_input(rings)
+    un = delaunay(pts)
+    outer = constrained_delaunay(pts, constraints, base_tris=un)
+    return pts, un, outer, _inside_triangles(pts, outer, rings)
+
+
+def triangles_area(pts, tris) -> float:
+    """Σ |triangle area| over index triples, in triangle order."""
+    total = 0.0
+    for a, b, c in tris:
+        pa, pb, pc = pts[a], pts[b], pts[c]
+        total += abs(
+            (pb[0] - pa[0]) * (pc[1] - pa[1]) - (pb[1] - pa[1]) * (pc[0] - pa[0])
+        ) / 2.0
+    return total

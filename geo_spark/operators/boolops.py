@@ -15,36 +15,22 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MULTIPOLY_TYPE = (
-    "array<struct<exterior:array<struct<x:double,y:double>>,"
-    "interiors:array<array<struct<x:double,y:double>>>>>"
-)
+from geo_spark.operators import geom_udf as gu
+from geo_spark.operators.geom_udf import MULTIPOLY_TYPE
+
+_RING = "array<struct<x:double,y:double>>"
 
 
-def _poly_to_np(poly):
-    ext = np.asarray([(c["x"], c["y"]) for c in poly["exterior"]], dtype=np.float64)
-    holes = [
-        np.asarray([(c["x"], c["y"]) for c in ring], dtype=np.float64)
-        for ring in (poly["interiors"] or [])
-    ]
-    return ext, holes
-
-
-def _result_to_rows(results):
-    return [
-        {
-            "exterior": [{"x": float(x), "y": float(y)} for x, y in ext],
-            "interiors": [
-                [{"x": float(x), "y": float(y)} for x, y in h] for h in holes
-            ],
-        }
-        for ext, holes in results
-    ]
+def _read_polygons(t: pa.Table) -> list:
+    """(exterior, holes) per row of a table's exterior/interiors columns."""
+    return gu.read_polygons(
+        t.column("exterior").combine_chunks(), t.column("interiors").combine_chunks()
+    )
 
 
 def overlay_pairs(
@@ -57,38 +43,19 @@ def overlay_pairs(
 
     ``a_col``/``b_col`` are struct columns with fields exterior/interiors.
     """
+    from geo_spark.kernels.area import pieces_area
+    from geo_spark.kernels.boolops import boolean_op
 
-    @F.pandas_udf(MULTIPOLY_TYPE)
-    def overlay_udf(a: pd.DataFrame, b: pd.DataFrame) -> pd.Series:
-        # struct columns arrive as pandas DataFrames (one column per field)
-        from geo_spark.kernels.boolops import boolean_op
+    def overlay(ea, ha, eb, hb):
+        return boolean_op(ea, ha, eb, hb, op)
 
-        out = []
-        for i in range(len(a)):
-            pa = {"exterior": a["exterior"].iloc[i], "interiors": a["interiors"].iloc[i]}
-            pb = {"exterior": b["exterior"].iloc[i], "interiors": b["interiors"].iloc[i]}
-            ea, ha = _poly_to_np(pa)
-            eb, hb = _poly_to_np(pb)
-            out.append(_result_to_rows(boolean_op(ea, ha, eb, hb, op)))
-        return pd.Series(out)
-
-    @F.pandas_udf(T.DoubleType())
-    def area_udf(res: pd.Series) -> pd.Series:
-        from geo_spark.kernels.area import ring_signed_area
-
-        vals = []
-        for polys in res:
-            total = 0.0
-            for p in polys or []:
-                ext, holes = _poly_to_np(p)
-                total += abs(ring_signed_area(ext))
-                for h in holes:
-                    total -= abs(ring_signed_area(h))
-            vals.append(total)
-        return pd.Series(vals)
-
-    out = df.withColumn("result", overlay_udf(F.col(a_col), F.col(b_col)))
-    return out.withColumn("result_area", area_udf(F.col("result")))
+    a, b = F.col(a_col), F.col(b_col)
+    result = gu.geom_udf(overlay, MULTIPOLY_TYPE)(
+        gu.polygon(a["exterior"], a["interiors"]), gu.polygon(b["exterior"], b["interiors"])
+    )
+    out = df.withColumn("result", result)
+    area = gu.geom_udf(pieces_area, T.DoubleType())(gu.multipolygon(F.col("result")))
+    return out.withColumn("result_area", area)
 
 
 def distributed_unary_union(
@@ -105,48 +72,38 @@ def distributed_unary_union(
     """
     from geo_spark.functions import cell_encode_col
 
-    df = polygons.select("exterior", "interiors", "xmin", "ymin", "xmax", "ymax")
-    df = df.withColumn(
-        "_cell",
+    df = polygons.select(
         cell_encode_col(
             (F.col("xmin") + F.col("xmax")) / 2.0,
             (F.col("ymin") + F.col("ymax")) / 2.0,
             res,
-        ),
+        ).alias("cell"),
+        "exterior",
+        "interiors",
     )
+    schema = f"cell long, exterior {_RING}, interiors array<{_RING}>"
 
-    poly_schema = (
-        "cell long, exterior array<struct<x:double,y:double>>, "
-        "interiors array<array<struct<x:double,y:double>>>"
-    )
-
-    def union_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def union_group(t: pa.Table) -> pa.Table:
         from geo_spark.kernels.boolops import unary_union
 
-        polys = []
-        for _, row in pdf.iterrows():
-            polys.append(_poly_to_np({"exterior": row["exterior"], "interiors": row["interiors"]}))
-        merged = unary_union(polys)
-        rows = _result_to_rows(merged)
-        return pd.DataFrame(
+        merged = unary_union(_read_polygons(t))
+        return pa.table(
             {
-                "cell": [pdf["_cell"].iloc[0]] * len(rows),
-                "exterior": [r["exterior"] for r in rows],
-                "interiors": [r["interiors"] for r in rows],
+                "cell": pa.array([t.column("cell")[0].as_py()] * len(merged), pa.int64()),
+                "exterior": gu.encode_coords([e for e, _ in merged]),
+                "interiors": gu.encode_rings([h for _, h in merged]),
             }
         )
 
-    level = polygons.sparkSession.createDataFrame([], schema=poly_schema)
-    level = df.groupBy("_cell").applyInPandas(union_group, schema=poly_schema)
+    level = df.groupBy("cell").applyInArrow(union_group, schema=schema)
 
     from geo_spark.functions import cell_parent_col
 
     for _ in range(merge_levels):
         level = (
-            level.withColumn("_cell", cell_parent_col("cell", 2))
-            .drop("cell")
-            .groupBy("_cell")
-            .applyInPandas(union_group, schema=poly_schema)
+            level.withColumn("cell", cell_parent_col("cell", 2))
+            .groupBy("cell")
+            .applyInArrow(union_group, schema=schema)
         )
 
     from geo_spark.kernels.boolops import unary_union
@@ -165,54 +122,26 @@ def distributed_unary_union(
             f"{merge_levels} merge levels (> {max_driver_pieces}); raise "
             "merge_levels/res so the cross-cell residue fits the driver fold"
         )
-    local = [
-        _poly_to_np({"exterior": r["exterior"], "interiors": r["interiors"]})
-        for r in level.collect()
-    ]
-    return unary_union(local)
+    return unary_union(_read_polygons(level.toArrow()))
 
 
 def mixed_overlay_stats(
-    ext_a: "Column", ints_a: "Column", ext_b: "Column", ints_b: "Column", op: str
-) -> "Column":
+    ext_a: Column, ints_a: Column, ext_b: Column, ints_b: Column, op: str
+) -> Column:
     """struct<n_polys,poly_area,n_segs,seg_len,n_points>: the heterogeneous
     overlay of two polygon columns (kernels/overlay_mixed.mixed_overlay —
     the GeometryCollection-shaped result JTS OverlayNG produces: area pieces
     + collapsed/shared-boundary line pieces + isolated touch points).
     """
-    from geo_spark.kernels.area import ring_signed_area
+    from geo_spark.kernels.area import pieces_area
     from geo_spark.kernels.overlay_mixed import mixed_overlay
 
-    @F.pandas_udf(
-        "struct<n_polys:int,poly_area:double,n_segs:int,seg_len:double,n_points:int>"
-    )
-    def udf(ea: pd.Series, ia: pd.Series, eb: pd.Series, ib: pd.Series) -> pd.DataFrame:
-        import numpy as np
+    def overlay_stats(ea, ha, eb, hb):
+        pts, segs, polys = mixed_overlay(("Polygon", [ea] + ha), ("Polygon", [eb] + hb), op)
+        slen = sum(float(np.hypot(b[0] - a[0], b[1] - a[1])) for a, b in segs)
+        return len(polys), pieces_area(polys), len(segs), slen, len(pts)
 
-        cols = {"n_polys": [], "poly_area": [], "n_segs": [], "seg_len": [], "n_points": []}
-        for i in range(len(ea)):
-            def poly(ext, ints):
-                rings = [np.asarray([(c["x"], c["y"]) for c in ext], dtype=np.float64)]
-                for ring in ints or []:
-                    rings.append(np.asarray([(c["x"], c["y"]) for c in ring], dtype=np.float64))
-                return ("Polygon", rings)
-
-            pts, segs, polys = mixed_overlay(
-                poly(ea.iloc[i], ia.iloc[i]), poly(eb.iloc[i], ib.iloc[i]), op
-            )
-            area = 0.0
-            for ext, holes in polys:
-                area += abs(ring_signed_area(np.asarray(ext, dtype=np.float64)))
-                for h in holes:
-                    area -= abs(ring_signed_area(np.asarray(h, dtype=np.float64)))
-            slen = sum(
-                float(np.hypot(b[0] - a[0], b[1] - a[1])) for a, b in segs
-            )
-            cols["n_polys"].append(len(polys))
-            cols["poly_area"].append(area)
-            cols["n_segs"].append(len(segs))
-            cols["seg_len"].append(slen)
-            cols["n_points"].append(len(pts))
-        return pd.DataFrame(cols)
-
-    return udf(ext_a, ints_a, ext_b, ints_b)
+    return gu.geom_udf(
+        overlay_stats,
+        "struct<n_polys:int,poly_area:double,n_segs:int,seg_len:double,n_points:int>",
+    )(gu.polygon(ext_a, ints_a), gu.polygon(ext_b, ints_b))

@@ -1,0 +1,238 @@
+"""One adapter between Spark geometry columns and per-row numpy kernels.
+
+Every per-row geometry operator is ``geom_udf(fn, return_type)(*args)``.
+The call site declares each argument's shape — ``coords(col)``,
+``rings(col)``, ``polygon(exterior, interiors)``, ``multipolygon(col)`` or
+a plain Column for a scalar — and ``fn`` receives numpy ``(n, 2)`` float64
+arrays in that shape: coords → one array, rings → a list of arrays,
+polygon → two arguments (exterior, list of holes), multipolygon → a list of
+(exterior, holes) pairs. NULL geometry decodes to an empty array / list.
+
+Wire format
+-----------
+Geometry columns cross into Python as Arrow's own nested lists: the UDF is
+an Arrow UDF (``F.arrow_udf``), so each argument arrives as a
+``pyarrow`` array and no pandas conversion runs. A ``struct<x,y>`` array is
+stored columnar — one float64 buffer for x, one for y — so each batch
+decodes with one ``np.column_stack`` of the two child buffers, and every
+row (ring, hole list, piece list) is a slice at the list offsets. Output
+goes back the same way: coordinates concatenated into x/y buffers, nested
+by offsets (``encode_coords`` / ``encode_rings`` / ``encode_pieces``).
+
+The pandas route this replaces broke on nesting. On PySpark 4.1.2 an
+``array<struct<x,y>>`` column reaches a pandas UDF as an ndarray of
+per-vertex Python dicts; a ring list whose rings differ in length raises
+"inhomogeneous shape" inside PySpark's Arrow→pandas converter, and a list
+of exactly one ring comes out as a bare ndarray (``holes or []`` then
+raises "truth value … is ambiguous"). Splitting x/y JVM-side with
+``F.transform`` fixes the input for two-deep nestings (decode of 40k rings
+/ 2.46M vertices on a 4-vCPU VM: 1.96–2.35 s through dicts against
+0.83–0.97 s split, identical values), but deeper ones crash the Python
+worker (``array<array<array<double>>>`` segfaults in pyarrow's
+``to_pandas`` when a batch holds no inner list), and a JVM expression
+between two UDFs stops Spark from chaining them into one Python stage —
+``multipolygon_area(buffer_ring(...))`` ran as two ArrowEvalPython stages.
+Arrow UDFs take the columns as they are, so chained geometry UDFs stay in
+one stage.
+
+Output follows ``return_type``: ``COORDS_TYPE`` and ``MULTIPOLY_TYPE`` are
+encoded as above; a struct of scalars comes from ``fn``'s tuples (None →
+all-NULL fields); scalars and arrays of scalars pass through. NaN becomes
+NULL, as in a pandas UDF.
+
+Payload memo
+------------
+Within one Arrow batch ``fn`` runs once per distinct payload: the key is
+the bytes of every decoded geometry argument plus the scalar values.
+Enriched tables routinely repeat one geometry across many rows (a polygon
+joined to every record it covers); the heavy kernels cost ≥ 1 ms/row while
+the key costs ~1 µs/row. Kernels must be pure (they also receive views of
+the batch buffers). Nothing persists across batches or runs.
+"""
+
+from __future__ import annotations
+
+from collections import namedtuple
+
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
+
+COORDS_TYPE = T.ArrayType(
+    T.StructType([T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType())])
+)
+MULTIPOLY_TYPE = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("exterior", COORDS_TYPE),
+            T.StructField("interiors", T.ArrayType(COORDS_TYPE)),
+        ]
+    )
+)
+
+_EMPTY = np.empty((0, 2), dtype=np.float64)
+
+
+# --- decoding: one pyarrow array → one value per row ---------------------------
+
+
+def _rows(arr: pa.Array, items: list, null) -> list:
+    """Slice ``items`` (the decoded child of list array ``arr``) per row."""
+    offs = arr.offsets.to_numpy()
+    if arr.null_count == 0:
+        return [items[offs[i] : offs[i + 1]] for i in range(len(arr))]
+    valid = arr.is_valid().to_numpy(zero_copy_only=False)
+    return [items[offs[i] : offs[i + 1]] if valid[i] else null for i in range(len(arr))]
+
+
+def read_coords(arr: pa.Array) -> list:
+    """``array<struct<x,y>>`` → one (n,2) float64 array per row."""
+    x, y = arr.values.flatten()
+    xy = np.column_stack((x.to_numpy(zero_copy_only=False), y.to_numpy(zero_copy_only=False)))
+    return _rows(arr, xy, _EMPTY)
+
+
+def read_rings(arr: pa.Array) -> list:
+    """``array<array<struct<x,y>>>`` → one list of (n,2) rings per row."""
+    return _rows(arr, read_coords(arr.values), [])
+
+
+def read_polygons(exterior: pa.Array, interiors: pa.Array) -> list:
+    """Exterior + interiors arrays → one (exterior, holes) pair per row."""
+    return list(zip(read_coords(exterior), read_rings(interiors)))
+
+
+def read_pieces(arr: pa.Array) -> list:
+    """``MULTIPOLY_TYPE`` → one list of (exterior, holes) pieces per row."""
+    return _rows(arr, read_polygons(*arr.values.flatten()), [])
+
+
+# --- encoding: one value per row → one pyarrow array ----------------------------
+
+
+def _nest(lens: list, child: pa.Array) -> pa.Array:
+    offsets = np.zeros(len(lens) + 1, dtype=np.int32)
+    np.cumsum(lens, out=offsets[1:])
+    return pa.ListArray.from_arrays(pa.array(offsets), child)
+
+
+def encode_coords(rows) -> pa.Array:
+    """(n,2) arrays (or point lists) → ``array<struct<x,y>>``."""
+    arrs = [np.asarray(r, dtype=np.float64).reshape(-1, 2) for r in rows]
+    xy = np.concatenate(arrs) if arrs else _EMPTY
+    pts = pa.StructArray.from_arrays(
+        [pa.array(xy[:, 0]), pa.array(xy[:, 1])], names=["x", "y"]
+    )
+    return _nest([len(a) for a in arrs], pts)
+
+
+def encode_rings(rows) -> pa.Array:
+    """Lists of rings → ``array<array<struct<x,y>>>``."""
+    return _nest([len(r) for r in rows], encode_coords([ring for r in rows for ring in r]))
+
+
+def encode_pieces(rows) -> pa.Array:
+    """Lists of (exterior, holes) pieces → ``MULTIPOLY_TYPE``."""
+    flat = [piece for r in rows for piece in r]
+    pieces = pa.StructArray.from_arrays(
+        [encode_coords([e for e, _ in flat]), encode_rings([h for _, h in flat])],
+        names=["exterior", "interiors"],
+    )
+    return _nest([len(r) for r in rows], pieces)
+
+
+# --- argument shapes -------------------------------------------------------------
+
+# the columns one kernel argument reads + the decoder from their arrays to
+# one tuple of the kernel's positional arguments per row
+_Arg = namedtuple("_Arg", "cols decode")
+
+
+def coords(col: Column) -> _Arg:
+    return _Arg([col], lambda a: [(c,) for c in read_coords(a)])
+
+
+def rings(col: Column) -> _Arg:
+    return _Arg([col], lambda a: [(r,) for r in read_rings(a)])
+
+
+def polygon(exterior: Column, interiors: Column) -> _Arg:
+    return _Arg([exterior, interiors], read_polygons)
+
+
+def multipolygon(col: Column) -> _Arg:
+    return _Arg([col], lambda a: [(p,) for p in read_pieces(a)])
+
+
+def _scalar(col: Column) -> _Arg:
+    return _Arg([col], lambda a: [(v,) for v in a.to_pylist()])
+
+
+def _key(v):
+    """Hashable payload key: coordinate bytes, nesting kept, scalars as-is."""
+    if isinstance(v, np.ndarray):
+        return v.tobytes()
+    if isinstance(v, (list, tuple)):
+        return tuple(_key(e) for e in v)
+    return v
+
+
+# --- the adapter -----------------------------------------------------------------
+
+
+def _encoder(rt: T.DataType):
+    """Batch encoder (list of ``fn`` results → pyarrow array) for a type."""
+    if rt == COORDS_TYPE:
+        return encode_coords
+    if rt == MULTIPOLY_TYPE:
+        return encode_pieces
+    at = to_arrow_type(rt)
+    if isinstance(rt, T.StructType):
+        names = rt.names
+        empty = dict.fromkeys(names)
+        return lambda out: pa.array(
+            [empty if o is None else dict(zip(names, o)) for o in out], type=at, from_pandas=True
+        )
+    return lambda out: pa.array(out, type=at, from_pandas=True)
+
+
+def geom_udf(fn, return_type):
+    """Lift a per-row numpy kernel into a Column function.
+
+    ``fn(*decoded_args)`` returns one value of ``return_type`` (a DataType
+    or DDL string); the returned callable takes ``coords``/``rings``/
+    ``polygon``/``multipolygon`` markers and plain Columns (scalars), in
+    ``fn``'s argument order.
+    """
+
+    def apply(*args) -> Column:
+        rt = T._parse_datatype_string(return_type) if isinstance(return_type, str) else return_type
+        encode = _encoder(rt)
+        args = [a if isinstance(a, _Arg) else _scalar(a) for a in args]
+        plan = [(a.decode, len(a.cols)) for a in args]
+        miss = object()
+
+        def run(*arrays: pa.Array) -> pa.Array:
+            per_arg = []
+            pos = 0
+            for decode, n in plan:
+                per_arg.append(decode(*arrays[pos : pos + n]))
+                pos += n
+            memo = {}
+            out = []
+            for row in zip(*per_arg):
+                kargs = [v for arg in row for v in arg]
+                key = _key(kargs)
+                v = memo.get(key, miss)
+                if v is miss:
+                    v = memo[key] = fn(*kargs)
+                out.append(v)
+            return encode(out)
+
+        run.__name__ = getattr(fn, "__name__", "geom_udf").strip("<>")
+        return F.arrow_udf(run, rt)(*[c for a in args for c in a.cols])
+
+    return apply

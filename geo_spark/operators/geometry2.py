@@ -1,8 +1,10 @@
 """Column surface for the construction/validation kernels (batch 2).
 
 Same conventions as operators/scalar.py: geometry in/out as
-array<struct<x,y>> (rings) or multipolygon structs, vectorized pandas UDFs
-per Arrow batch.
+array<struct<x,y>> (rings) or multipolygon structs; every per-row kernel
+runs through the geometry UDF adapter (operators/geom_udf.py), which owns
+the Arrow wire format, the per-batch payload memo and output assembly.
+Voronoi stays on grouped ``applyInPandas`` (one group = one diagram).
 """
 
 from __future__ import annotations
@@ -13,49 +15,34 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geo_spark.operators.boolops import MULTIPOLY_TYPE, _result_to_rows
+from geo_spark.operators import geom_udf as gu
+from geo_spark.operators.geom_udf import COORDS_TYPE, MULTIPOLY_TYPE
 from geo_spark.operators.route import fetch_if_small, fits
-from geo_spark.operators.scalar import COORDS_TYPE, _to_np, _to_rows
+
+
+def _to_rows(coords: np.ndarray):
+    return [{"x": float(x), "y": float(y)} for x, y in coords]
 
 
 def buffer_ring(coords: Column, r, quad_segs: int = 8) -> Column:
     """Round-join buffer of a closed ring (as polygon) → multipolygon."""
+    from geo_spark.kernels.buffer import buffer_polygon
 
-    @F.pandas_udf(MULTIPOLY_TYPE)
-    def udf(arrs: pd.Series, dist: pd.Series) -> pd.Series:
-        from geo_spark.kernels.buffer import buffer_polygon
+    def buffer(ring, dist):
+        return buffer_polygon(ring, (), float(dist), quad_segs)
 
-        out = []
-        for i, arr in enumerate(arrs):
-            out.append(
-                _result_to_rows(
-                    buffer_polygon(_to_np(arr), (), float(dist.iloc[i]), quad_segs)
-                )
-            )
-        return pd.Series(out)
-
-    return udf(coords, F.lit(r).cast("double"))
+    return gu.geom_udf(buffer, MULTIPOLY_TYPE)(gu.coords(coords), F.lit(r).cast("double"))
 
 
 def relate_polygons(ext_a: Column, ints_a: Column, ext_b: Column, ints_b: Column) -> Column:
     """DE-9IM matrix string for two polygon columns (full RelateComputer
     semantics — kernels.relate2.relate_polygon_pair; parity
     ``relate/relate_operation.rs``, ``intersection_matrix.rs``)."""
+    from geo_spark.kernels.relate2 import relate_polygon_pair
 
-    @F.pandas_udf(T.StringType())
-    def udf(ea: pd.Series, ia: pd.Series, eb: pd.Series, ib: pd.Series) -> pd.Series:
-        from geo_spark.kernels.relate2 import relate_polygon_pair
-
-        out = []
-        for i in range(len(ea)):
-            ha = [] if ia.iloc[i] is None else [_to_np(h) for h in ia.iloc[i]]
-            hb = [] if ib.iloc[i] is None else [_to_np(h) for h in ib.iloc[i]]
-            out.append(
-                relate_polygon_pair(_to_np(ea.iloc[i]), ha, _to_np(eb.iloc[i]), hb)
-            )
-        return pd.Series(out)
-
-    return udf(ext_a, ints_a, ext_b, ints_b)
+    return gu.geom_udf(relate_polygon_pair, T.StringType())(
+        gu.polygon(ext_a, ints_a), gu.polygon(ext_b, ints_b)
+    )
 
 
 def make_valid_col(exterior: Column, interiors: Column) -> Column:
@@ -63,19 +50,9 @@ def make_valid_col(exterior: Column, interiors: Column) -> Column:
 
     Parity: ``MakeValid`` (``repair_polygon/mod.rs``) via
     kernels.repair.make_valid — always emits a valid multipolygon."""
+    from geo_spark.kernels.repair import make_valid
 
-    @F.pandas_udf(MULTIPOLY_TYPE)
-    def udf(ext: pd.Series, hol: pd.Series) -> pd.Series:
-        from geo_spark.kernels.repair import make_valid
-
-        out = []
-        for i in range(len(ext)):
-            hs = hol.iloc[i]
-            holes = [] if hs is None else [_to_np(h) for h in hs]
-            out.append(_result_to_rows(make_valid(_to_np(ext.iloc[i]), holes)))
-        return pd.Series(out)
-
-    return udf(exterior, interiors)
+    return gu.geom_udf(make_valid, MULTIPOLY_TYPE)(gu.polygon(exterior, interiors))
 
 
 def multipolygon_area(mp: Column) -> Column:
@@ -84,78 +61,38 @@ def multipolygon_area(mp: Column) -> Column:
     Parity: ``Area`` over MultiPolygon (``geo/src/algorithm/area.rs``) —
     sum over pieces of |exterior| − Σ|holes|.
     """
+    from geo_spark.kernels.area import pieces_area
 
-    @F.pandas_udf(T.DoubleType())
-    def udf(mps: pd.Series) -> pd.Series:
-        from geo_spark.kernels.area import ring_signed_area
-
-        out = []
-        for pieces in mps:
-            tot = 0.0
-            for piece in pieces or []:
-                tot += abs(ring_signed_area(_to_np(piece["exterior"])))
-                for h in piece["interiors"] or []:
-                    tot -= abs(ring_signed_area(_to_np(h)))
-            out.append(tot)
-        return pd.Series(out)
-
-    return udf(mp)
+    return gu.geom_udf(pieces_area, T.DoubleType())(gu.multipolygon(mp))
 
 
 def concave_hull_points(coords: Column, concavity: float = 2.0) -> Column:
-    @F.pandas_udf(COORDS_TYPE)
-    def udf(arrs: pd.Series) -> pd.Series:
-        from geo_spark.kernels.hull2 import concave_hull
+    from geo_spark.kernels.hull2 import concave_hull
 
-        return pd.Series([_to_rows(concave_hull(_to_np(a), concavity)) for a in arrs])
-
-    return udf(coords)
+    return gu.geom_udf(lambda pts: concave_hull(pts, concavity), COORDS_TYPE)(gu.coords(coords))
 
 
 def triangulate(coords: Column) -> Column:
     """Ear-cut triangle index triples of a ring: array<array<int>>."""
+    from geo_spark.kernels.geom2 import triangulate_earcut
 
-    @F.pandas_udf("array<array<int>>")
-    def udf(arrs: pd.Series) -> pd.Series:
-        from geo_spark.kernels.geom2 import triangulate_earcut
-
-        return pd.Series(
-            [[list(t) for t in triangulate_earcut(_to_np(a))] for a in arrs]
-        )
-
-    return udf(coords)
+    return gu.geom_udf(triangulate_earcut, "array<array<int>>")(gu.coords(coords))
 
 
 def validity_problems(exterior: Column, interiors: Column) -> Column:
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def udf(ext: pd.Series, hol: pd.Series) -> pd.Series:
-        from geo_spark.kernels.geom2 import validate_polygon
+    from geo_spark.kernels.geom2 import validate_polygon
 
-        out = []
-        for i in range(len(ext)):
-            hs = hol.iloc[i]
-            holes = [] if hs is None else [_to_np(h) for h in hs]
-            out.append(validate_polygon(_to_np(ext.iloc[i]), holes))
-        return pd.Series(out)
-
-    return udf(exterior, interiors)
+    return gu.geom_udf(validate_polygon, T.ArrayType(T.StringType()))(
+        gu.polygon(exterior, interiors)
+    )
 
 
 def interior_point_col(exterior: Column, interiors: Column) -> Column:
-    @F.pandas_udf("struct<x:double,y:double>")
-    def udf(ext: pd.Series, hol: pd.Series) -> pd.DataFrame:
-        from geo_spark.kernels.geom2 import interior_point
+    from geo_spark.kernels.geom2 import interior_point
 
-        xs, ys = [], []
-        for i in range(len(ext)):
-            hs = hol.iloc[i]
-            holes = [] if hs is None else [_to_np(h) for h in hs]
-            p = interior_point(_to_np(ext.iloc[i]), holes)
-            xs.append(None if p is None else p[0])
-            ys.append(None if p is None else p[1])
-        return pd.DataFrame({"x": xs, "y": ys})
-
-    return udf(exterior, interiors)
+    return gu.geom_udf(interior_point, "struct<x:double,y:double>")(
+        gu.polygon(exterior, interiors)
+    )
 
 
 def voronoi_of_group(
@@ -198,35 +135,14 @@ def unary_union_rings(rings: Column) -> Column:
     Per-row n-way union (kernels/boolops.unary_union — the reference's
     ``unary_union``, bool_ops/mod.rs:259): pieces after merging + total area.
     """
-    from geo_spark.kernels.area import ring_signed_area
+    from geo_spark.kernels.area import pieces_area
     from geo_spark.kernels.boolops import unary_union
 
-    @F.pandas_udf("struct<n_pieces:int,area:double>")
-    def udf(arrs: pd.Series) -> pd.DataFrame:
-        from geo_spark.operators.scalar import _PayloadMemo
+    def union_stats(rs):
+        merged = unary_union([(r, []) for r in rs])
+        return len(merged), pieces_area(merged)
 
-        memo = _PayloadMemo()
-        ns, areas = [], []
-        for rings_row in arrs:
-            if rings_row is None:
-                rings_row = []
-            polys = [(_to_np(r), []) for r in rings_row]
-
-            def compute():
-                merged = unary_union(polys)
-                total = 0.0
-                for ext, holes in merged:
-                    total += abs(ring_signed_area(np.asarray(ext, dtype=np.float64)))
-                    for h in holes:
-                        total -= abs(ring_signed_area(np.asarray(h, dtype=np.float64)))
-                return len(merged), total
-
-            n, total = memo.get(_PayloadMemo.ring_key([p[0] for p in polys]), compute)
-            ns.append(n)
-            areas.append(total)
-        return pd.DataFrame({"n_pieces": ns, "area": areas})
-
-    return udf(rings)
+    return gu.geom_udf(union_stats, "struct<n_pieces:int,area:double>")(gu.rings(rings))
 
 
 def delaunay_stitch_stats(coords: Column) -> Column:
@@ -237,36 +153,18 @@ def delaunay_stitch_stats(coords: Column) -> Column:
     Parity: TriangulateDelaunay (delaunay triangle set) + StitchTriangles
     (stitch.rs:25 — union of edge-adjacent triangles).
     """
-    from geo_spark.kernels.area import ring_signed_area
+    from geo_spark.kernels.area import pieces_area
     from geo_spark.kernels.stitch import stitch_triangles
     from geo_spark.kernels.triangulate import delaunay
 
-    @F.pandas_udf("struct<n_tri:int,n_pieces:int,area:double>")
-    def udf(arrs: pd.Series) -> pd.DataFrame:
-        from geo_spark.operators.scalar import _PayloadMemo
+    def stitch_stats(pts):
+        tris = delaunay(pts)
+        stitched = stitch_triangles([pts[list(t)] for t in tris])
+        return len(tris), len(stitched), pieces_area(stitched)
 
-        memo = _PayloadMemo()
-        nt, npc, area = [], [], []
-        for arr in arrs:
-            pts = _to_np(arr)
-
-            def compute():
-                tris = delaunay(pts)
-                stitched = stitch_triangles([pts[list(t)] for t in tris])
-                total = 0.0
-                for ext, holes in stitched:
-                    total += abs(ring_signed_area(np.asarray(ext, dtype=np.float64)))
-                    for h in holes:
-                        total -= abs(ring_signed_area(np.asarray(h, dtype=np.float64)))
-                return len(tris), len(stitched), total
-
-            n_tri, n_pc, total = memo.get(_PayloadMemo.ring_key([pts]), compute)
-            nt.append(n_tri)
-            npc.append(n_pc)
-            area.append(total)
-        return pd.DataFrame({"n_tri": nt, "n_pieces": npc, "area": area})
-
-    return udf(coords)
+    return gu.geom_udf(stitch_stats, "struct<n_tri:int,n_pieces:int,area:double>")(
+        gu.coords(coords)
+    )
 
 
 def buffer_polygon_stats(
@@ -280,35 +178,16 @@ def buffer_polygon_stats(
     """struct<n_pieces,area>: buffer (dilate r>0 / erode r<0) of a polygon
     column with the requested LineJoin style (buffer.rs:14-23,59 —
     round/mitre/bevel)."""
-    from geo_spark.kernels.area import ring_signed_area
+    from geo_spark.kernels.area import pieces_area
     from geo_spark.kernels.buffer import buffer_polygon
 
-    @F.pandas_udf("struct<n_pieces:int,area:double>")
-    def udf(exts: pd.Series, ints: pd.Series) -> pd.DataFrame:
-        from geo_spark.operators.scalar import _PayloadMemo
+    def buffer_stats(ext, holes):
+        out = buffer_polygon(ext, holes, r, quad_segs, join, mitre_limit)
+        return len(out), pieces_area(out)
 
-        memo = _PayloadMemo()
-        ns, areas = [], []
-        for i in range(len(exts)):
-            holes = ints.iloc[i]
-            holes = [] if holes is None else [_to_np(h) for h in holes]
-            ext_np = _to_np(exts.iloc[i])
-
-            def compute():
-                out = buffer_polygon(ext_np, holes, r, quad_segs, join, mitre_limit)
-                total = 0.0
-                for ext, hs in out:
-                    total += abs(ring_signed_area(np.asarray(ext, dtype=np.float64)))
-                    for h in hs:
-                        total -= abs(ring_signed_area(np.asarray(h, dtype=np.float64)))
-                return len(out), total
-
-            n, total = memo.get(_PayloadMemo.ring_key([ext_np] + holes), compute)
-            ns.append(n)
-            areas.append(total)
-        return pd.DataFrame({"n_pieces": ns, "area": areas})
-
-    return udf(exterior, interiors)
+    return gu.geom_udf(buffer_stats, "struct<n_pieces:int,area:double>")(
+        gu.polygon(exterior, interiors)
+    )
 
 
 def voronoi_distributed(
@@ -608,141 +487,39 @@ def polygonize_lines(lines: Column) -> Column:
     (kernels/polygonize.py — JTS Polygonizer ring assembly: dangles and cut
     edges dropped, faces to shells, negative cycles to holes of the
     smallest strictly-containing shell)."""
+    from geo_spark.kernels.polygonize import polygonize
 
-    @F.pandas_udf(MULTIPOLY_TYPE)
-    def udf(rows: pd.Series) -> pd.Series:
-        from geo_spark.kernels.polygonize import polygonize
-        from geo_spark.operators.scalar import _PayloadMemo
+    def faces(seqs):
+        segs = []
+        for seq in seqs:
+            for i in range(len(seq) - 1):
+                segs.append(
+                    (
+                        (float(seq[i, 0]), float(seq[i, 1])),
+                        (float(seq[i + 1, 0]), float(seq[i + 1, 1])),
+                    )
+                )
+        return polygonize(segs)
 
-        memo = _PayloadMemo()
-        out = []
-        for chains in rows:
-            if chains is None:
-                chains = []
-            seqs = [_to_np(member["pts"]) for member in chains]
-
-            def compute():
-                segs = []
-                for seq in seqs:
-                    for i in range(len(seq) - 1):
-                        segs.append(
-                            (
-                                (float(seq[i, 0]), float(seq[i, 1])),
-                                (float(seq[i + 1, 0]), float(seq[i + 1, 1])),
-                            )
-                        )
-                return _result_to_rows(polygonize(segs))
-
-            out.append(memo.get(_PayloadMemo.ring_key(seqs), compute))
-        return pd.Series(out)
-
-    # ragged array<array<struct>> crashes the Arrow input converter in this
-    # environment; a struct wrapper per chain takes the (working) dict path
-    return udf(F.transform(lines, lambda c: F.struct(c.alias("pts"))))
-
-
-def spade_triangulation_stats(exterior: Column, interiors: Column, mode: str) -> Column:
-    """struct<n_tri,area>: TriangulateSpade parity (triangulate_spade.rs —
-    'unconstrained' | 'outer' | 'constrained') over a polygon column via
-    kernels/triangulate.spade_triangulation (cavity-insertion CDT)."""
-
-    @F.pandas_udf("struct<n_tri:int,area:double>")
-    def udf(ext: pd.Series, hol: pd.Series) -> pd.DataFrame:
-        from geo_spark.kernels.triangulate import spade_triangulation
-        from geo_spark.operators.scalar import _PayloadMemo
-
-        memo = _PayloadMemo()
-        ns, areas = [], []
-        for i in range(len(ext)):
-            hs = hol.iloc[i]
-            rings = [_to_np(ext.iloc[i])] + ([] if hs is None else [_to_np(h) for h in hs])
-
-            def compute():
-                pts, tris = spade_triangulation(rings, mode)
-                tot = 0.0
-                for a, b, c in tris:
-                    pa, pb, pc = pts[a], pts[b], pts[c]
-                    tot += abs(
-                        (pb[0] - pa[0]) * (pc[1] - pa[1])
-                        - (pb[1] - pa[1]) * (pc[0] - pa[0])
-                    ) / 2.0
-                return len(tris), tot
-
-            n, tot = memo.get(_PayloadMemo.ring_key(rings), compute)
-            ns.append(n)
-            areas.append(tot)
-        return pd.DataFrame({"n_tri": ns, "area": areas})
-
-    return udf(exterior, interiors)
+    return gu.geom_udf(faces, MULTIPOLY_TYPE)(gu.rings(lines))
 
 
 def spade_triangulation_all_stats(exterior: Column, interiors: Column) -> Column:
     """All three TriangulateSpade modes in ONE pass (unconstrained Delaunay
     + one CDT, constrained derived by the interior filter) — struct
     <n_un,area_un,n_outer,area_outer,n_con,area_con>."""
+    from geo_spark.kernels.triangulate import spade_triangulation_all, triangles_area
 
-    @F.pandas_udf(
+    def all_stats(ext, holes):
+        pts, un, outer, con = spade_triangulation_all([ext] + holes)
+        return (
+            len(un), triangles_area(pts, un),
+            len(outer), triangles_area(pts, outer),
+            len(con), triangles_area(pts, con),
+        )
+
+    return gu.geom_udf(
+        all_stats,
         "struct<n_un:int,area_un:double,n_outer:int,area_outer:double,"
-        "n_con:int,area_con:double>"
-    )
-    def udf(ext: pd.Series, hol: pd.Series) -> pd.DataFrame:
-        from geo_spark.kernels.predicates import polygon_position
-        from geo_spark.kernels.triangulate import spade_triangulation
-
-        cols = {k: [] for k in ("n_un", "area_un", "n_outer", "area_outer", "n_con", "area_con")}
-
-        def tot_area(pts, tris):
-            s = 0.0
-            for a, b, c in tris:
-                pa, pb, pc = pts[a], pts[b], pts[c]
-                s += abs(
-                    (pb[0] - pa[0]) * (pc[1] - pa[1])
-                    - (pb[1] - pa[1]) * (pc[0] - pa[0])
-                ) / 2.0
-            return s
-
-        from geo_spark.kernels.triangulate import constrained_delaunay
-
-        for i in range(len(ext)):
-            hs = hol.iloc[i]
-            rings = [_to_np(ext.iloc[i])] + ([] if hs is None else [_to_np(h) for h in hs])
-            pts_u, un = spade_triangulation(rings, "unconstrained")
-            # one Delaunay per row: the CDT starts from the unconstrained
-            # triangulation instead of recomputing it
-            pts_o = pts_u
-            # rebuild the constraint list the same way spade_triangulation does
-            seen = {}
-            ring_idx = []
-            for r in rings:
-                idxs = []
-                rr = r[:-1] if len(r) and (r[0] == r[-1]).all() else r
-                for x, y in rr:
-                    key = (float(x), float(y))
-                    if key not in seen:
-                        seen[key] = len(seen)
-                    idxs.append(seen[key])
-                ring_idx.append(idxs)
-            constraints = []
-            for idxs in ring_idx:
-                m_ = len(idxs)
-                for k in range(m_):
-                    a_, b_ = idxs[k], idxs[(k + 1) % m_]
-                    if a_ != b_:
-                        constraints.append((a_, b_))
-            outer = constrained_delaunay(pts_u, constraints, base_tris=un)
-            exterior_ring, holes = rings[0], rings[1:]
-            con = []
-            for t in outer:
-                cx = pts_o[list(t), 0].mean()
-                cy = pts_o[list(t), 1].mean()
-                if int(polygon_position([cx], [cy], exterior_ring, holes)[0]) == 1:
-                    con.append(t)
-            cols["n_un"].append(len(un))
-            cols["area_un"].append(tot_area(pts_u, un))
-            cols["n_outer"].append(len(outer))
-            cols["area_outer"].append(tot_area(pts_o, outer))
-            cols["n_con"].append(len(con))
-            cols["area_con"].append(tot_area(pts_o, con))
-        return pd.DataFrame(cols)
-
-    return udf(exterior, interiors)
+        "n_con:int,area_con:double>",
+    )(gu.polygon(exterior, interiors))

@@ -40,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geo_spark.operators import geom_udf as gu
 from geo_spark.operators.route import fetch_if_small, fits
 
 _RING_T = "array<struct<x:double,y:double>>"
@@ -480,21 +481,16 @@ def polygonize_distributed(
         & (F.col("hxmax") <= F.col("sxmax")) & (F.col("hymax") <= F.col("symax")),
     )
 
-    @F.pandas_udf("boolean")
-    def strictly_inside(hole: pd.Series, shell: pd.Series) -> pd.Series:
+    def strictly_inside(h, s):
         from geo_spark.kernels.predicates import polygon_position
 
-        out = []
-        for i in range(len(hole)):
-            h = np.asarray([(c["x"], c["y"]) for c in hole[i]], dtype=np.float64)
-            s = np.asarray([(c["x"], c["y"]) for c in shell[i]], dtype=np.float64)
-            pos = polygon_position(h[:-1, 0], h[:-1, 1], s)
-            out.append(bool((pos >= 0).all() and (pos > 0).any()))
-        return pd.Series(out)
+        pos = polygon_position(h[:-1, 0], h[:-1, 1], s)
+        return bool((pos >= 0).all() and (pos > 0).any())
 
     from pyspark.sql import Window
 
-    matched = cand.filter(strictly_inside(F.col("hole"), F.col("shell")))
+    inside = gu.geom_udf(strictly_inside, "boolean")
+    matched = cand.filter(inside(gu.coords(F.col("hole")), gu.coords(F.col("shell"))))
     w = Window.partitionBy("hole_id").orderBy(F.col("area").asc(), F.col("shell_id"))
     assigned = (
         matched.withColumn("_rk", F.row_number().over(w))

@@ -2,9 +2,10 @@
 
 The DataFrame surface for the §2.3/2.4 construction + conversion operators:
 each takes/returns plain Spark columns so Catalyst keeps pruning and
-pushdown; kernels run as vectorized pandas UDFs over Arrow batches (one
-numpy call per row's coord array — rows are whole geometries here, so the
-batch-of-arrays shape is the natural vectorization unit).
+pushdown; kernels run per row through the one geometry UDF adapter
+(operators/geom_udf.py — wire format, decode, payload memo, output
+assembly). Rows are whole geometries here, so the batch-of-arrays shape is
+the natural vectorization unit.
 
 Affine transforms and radians/degrees stay pure-SQL (`F.transform` over the
 coord array — JVM-side, no Python).
@@ -18,119 +19,24 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-COORDS_TYPE = T.ArrayType(
-    T.StructType([T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType())])
-)
+from geo_spark.operators import geom_udf as gu
+from geo_spark.operators.geom_udf import COORDS_TYPE
 
 
-def _to_np(arr) -> np.ndarray:
-    if arr is None or len(arr) == 0:
-        return np.empty((0, 2), dtype=np.float64)
-    return np.asarray([(c["x"], c["y"]) for c in arr], dtype=np.float64)
-
-
-def _to_rows(coords: np.ndarray):
-    return [{"x": float(x), "y": float(y)} for x, y in coords]
-
-
-class _PayloadMemo:
-    """Per-batch dedup of identical geometry payloads before an expensive
-    kernel (dictionary-style execution). Enriched tables routinely repeat
-    one geometry across many rows (a polygon joined to every record it
-    covers); the kernels guarded by this cost ≥ 1 ms/row while the bytes
-    key costs ~1 µs/row, so distinct-payload batches pay noise and
-    repeated-payload batches pay the kernel once per distinct geometry.
-    Scoped to one Arrow batch — nothing persists across batches or runs."""
-
-    __slots__ = ("_d",)
-
-    def __init__(self):
-        self._d = {}
-
-    @staticmethod
-    def ring_key(rings) -> tuple:
-        """Hashable key for a sequence of (n_i, 2) float arrays."""
-        return tuple(r.tobytes() for r in rings)
-
-    def get(self, key, compute):
-        d = self._d
-        if key in d:
-            return d[key]
-        v = compute()
-        d[key] = v
-        return v
-
-
-# ---------------------------------------------------------------------------
-# Arrow-native coords marshalling.
-#
-# An ``array<struct<x,y>>`` column crosses Arrow into a pandas UDF as an
-# ndarray of per-coordinate PYTHON DICTS (measured on this PySpark) — a
-# Python loop per vertex on both sides of every kernel. Instead we split the
-# struct array into two ``array<double>`` columns JVM-side (``F.transform``,
-# whole-stage codegen); those arrive as float64 numpy arrays per row, the
-# kernel input is one ``np.column_stack``, and kernel output goes back as
-# ``struct<xs,ys>`` reassembled JVM-side with ``arrays_zip`` + positional
-# struct cast. ArrowEvalPython materializes the UDF result once per plan, so
-# referencing both output fields does NOT re-run the UDF (verified on plan:
-# single pythonUDF0 attribute).
-# ---------------------------------------------------------------------------
-
-_XY_OUT = "struct<xs:array<double>, ys:array<double>>"
-
-
-def _xy_cols(coords: Column) -> tuple[Column, Column]:
-    return (
-        F.transform(coords, lambda p: p["x"]),
-        F.transform(coords, lambda p: p["y"]),
-    )
-
-
-def _np2(x, y) -> np.ndarray:
-    """(n,2) float64 from the per-row x/y numpy arrays (None → empty)."""
-    if x is None or len(x) == 0:
-        return np.empty((0, 2), dtype=np.float64)
-    return np.column_stack(
-        (np.asarray(x, dtype=np.float64), np.asarray(y, dtype=np.float64))
-    )
-
-
-def _zip_xy(r: Column) -> Column:
-    return F.arrays_zip(r["xs"], r["ys"]).cast(COORDS_TYPE)
-
-
-def _lift_coords_fn(fn):
-    """Lift a numpy (n,2)->(m,2) kernel into a coords-column transform."""
-
-    @F.pandas_udf(_XY_OUT)
-    def udf(xs: pd.Series, ys: pd.Series, *params: pd.Series) -> pd.DataFrame:
-        oxs, oys = [], []
-        for i in range(len(xs)):
-            args = [p.iloc[i] for p in params]
-            out = np.asarray(
-                fn(_np2(xs.iloc[i], ys.iloc[i]), *args), dtype=np.float64
-            ).reshape(-1, 2)
-            oxs.append(out[:, 0])
-            oys.append(out[:, 1])
-        return pd.DataFrame({"xs": oxs, "ys": oys})
-
-    def apply(coords: Column, *params: Column) -> Column:
-        x, y = _xy_cols(coords)
-        return _zip_xy(udf(x, y, *params))
-
-    return apply
+def _dbl(v) -> Column:
+    return F.lit(v).cast("double")  # F.lit passes a Column through
 
 
 def simplify_rdp(coords: Column, epsilon) -> Column:
     from geo_spark.kernels.simplify import rdp
 
-    return _lift_coords_fn(rdp)(coords, F.lit(epsilon).cast("double"))
+    return gu.geom_udf(rdp, COORDS_TYPE)(gu.coords(coords), _dbl(epsilon))
 
 
 def simplify_vw(coords: Column, epsilon) -> Column:
     from geo_spark.kernels.simplify import visvalingam
 
-    return _lift_coords_fn(visvalingam)(coords, F.lit(epsilon).cast("double"))
+    return gu.geom_udf(visvalingam, COORDS_TYPE)(gu.coords(coords), _dbl(epsilon))
 
 
 def simplify_stats(coords: Column, epsilon, algo: str = "rdp") -> Column:
@@ -143,34 +49,27 @@ def simplify_stats(coords: Column, epsilon, algo: str = "rdp") -> Column:
     """
     from geo_spark.kernels.simplify import rdp, visvalingam
 
-    fn = rdp if algo == "rdp" else visvalingam
+    simplify = rdp if algo == "rdp" else visvalingam
 
-    @F.pandas_udf("struct<n:int, sum_x:double, sum_y:double>")
-    def udf(xs: pd.Series, ys: pd.Series, eps: pd.Series) -> pd.DataFrame:
-        ns, sx, sy = [], [], []
-        for i in range(len(xs)):
-            out = np.asarray(
-                fn(_np2(xs.iloc[i], ys.iloc[i]), float(eps.iloc[i])), dtype=np.float64
-            ).reshape(-1, 2)
-            ns.append(out.shape[0])
-            sx.append(float(out[:, 0].sum()))
-            sy.append(float(out[:, 1].sum()))
-        return pd.DataFrame({"n": ns, "sum_x": sx, "sum_y": sy})
+    def stats(c, eps):
+        out = np.asarray(simplify(c, float(eps)), dtype=np.float64).reshape(-1, 2)
+        return out.shape[0], float(out[:, 0].sum()), float(out[:, 1].sum())
 
-    x, y = _xy_cols(coords)
-    return udf(x, y, F.lit(epsilon).cast("double"))
+    return gu.geom_udf(stats, "struct<n:int, sum_x:double, sum_y:double>")(
+        gu.coords(coords), _dbl(epsilon)
+    )
 
 
 def chaikin(coords: Column, n_iterations: int = 1) -> Column:
     from geo_spark.kernels.simplify import chaikin_smoothing
 
-    return _lift_coords_fn(chaikin_smoothing)(coords, F.lit(n_iterations))
+    return gu.geom_udf(chaikin_smoothing, COORDS_TYPE)(gu.coords(coords), F.lit(n_iterations))
 
 
 def densify(coords: Column, max_segment_length) -> Column:
     from geo_spark.kernels.lines import densify as _densify
 
-    return _lift_coords_fn(_densify)(coords, F.lit(max_segment_length).cast("double"))
+    return gu.geom_udf(_densify, COORDS_TYPE)(gu.coords(coords), _dbl(max_segment_length))
 
 
 def densify_metric(coords: Column, max_segment_length, metric: str = "haversine") -> Column:
@@ -179,7 +78,7 @@ def densify_metric(coords: Column, max_segment_length, metric: str = "haversine"
     from geo_spark.kernels.lines import densify_metric as _k
 
     fn = lambda c, m: _k(c, m, metric)  # noqa: E731 — close over the metric name
-    return _lift_coords_fn(fn)(coords, F.lit(max_segment_length).cast("double"))
+    return gu.geom_udf(fn, COORDS_TYPE)(gu.coords(coords), _dbl(max_segment_length))
 
 
 def segmentize_metric(coords: Column, n_segments: int, metric: str = "haversine") -> Column:
@@ -188,28 +87,7 @@ def segmentize_metric(coords: Column, n_segments: int, metric: str = "haversine"
     from geo_spark.kernels.lines import segmentize_metric as _k
 
     fn = lambda c, n: _k(c, int(n), metric)  # noqa: E731
-    return _lift_coords_fn(fn)(coords, F.lit(int(n_segments)))
-
-
-def segmentize_metric_pieces(coords: Column, n_segments: int, metric: str = "haversine") -> Column:
-    """Equal metric-length sub-linestrings (the reference's MultiLineString
-    shape, interior vertices retained) as array<array<struct<x,y>>>."""
-    from geo_spark.kernels.lines import segmentize_metric_pieces as _k
-
-    @F.pandas_udf("struct<xs:array<array<double>>, ys:array<array<double>>>")
-    def udf(xs: pd.Series, ys: pd.Series, ns: pd.Series) -> pd.DataFrame:
-        oxs, oys = [], []
-        for i in range(len(xs)):
-            pieces = _k(_np2(xs.iloc[i], ys.iloc[i]), int(ns.iloc[i]), metric)
-            oxs.append([p[:, 0] for p in pieces])
-            oys.append([p[:, 1] for p in pieces])
-        return pd.DataFrame({"xs": oxs, "ys": oys})
-
-    x, y = _xy_cols(coords)
-    r = udf(x, y, F.lit(int(n_segments)))
-    return F.zip_with(r["xs"], r["ys"], lambda a, b: F.arrays_zip(a, b)).cast(
-        T.ArrayType(COORDS_TYPE)
-    )
+    return gu.geom_udf(fn, COORDS_TYPE)(gu.coords(coords), F.lit(int(n_segments)))
 
 
 def remove_repeated(coords: Column) -> Column:
@@ -228,79 +106,37 @@ def remove_repeated(coords: Column) -> Column:
 def interpolate_point(coords: Column, fraction) -> Column:
     from geo_spark.kernels.lines import line_interpolate_point
 
-    @F.pandas_udf("struct<x:double,y:double>")
-    def udf(axs: pd.Series, ays: pd.Series, fr: pd.Series) -> pd.DataFrame:
-        xs, ys = [], []
-        for i in range(len(axs)):
-            p = line_interpolate_point(_np2(axs.iloc[i], ays.iloc[i]), float(fr.iloc[i]))
-            xs.append(None if p is None else p[0])
-            ys.append(None if p is None else p[1])
-        return pd.DataFrame({"x": xs, "y": ys})
-
-    x, y = _xy_cols(coords)
-    return udf(x, y, F.lit(fraction).cast("double"))
+    return gu.geom_udf(line_interpolate_point, "struct<x:double,y:double>")(
+        gu.coords(coords), _dbl(fraction)
+    )
 
 
 def locate_point(coords: Column, px, py) -> Column:
     from geo_spark.kernels.lines import line_locate_point
 
-    @F.pandas_udf(T.DoubleType())
-    def udf(axs: pd.Series, ays: pd.Series, xs: pd.Series, ys: pd.Series) -> pd.Series:
-        out = []
-        for i in range(len(axs)):
-            out.append(
-                line_locate_point(
-                    _np2(axs.iloc[i], ays.iloc[i]), float(xs.iloc[i]), float(ys.iloc[i])
-                )
-            )
-        return pd.Series(out, dtype="float64")
-
-    px = F.lit(px).cast("double") if not isinstance(px, Column) else px
-    py = F.lit(py).cast("double") if not isinstance(py, Column) else py
-    x, y = _xy_cols(coords)
-    return udf(x, y, px, py)
+    return gu.geom_udf(line_locate_point, T.DoubleType())(gu.coords(coords), _dbl(px), _dbl(py))
 
 
 def substring_line(coords: Column, start, end) -> Column:
     from geo_spark.kernels.lines import substring as _substring
 
-    return _lift_coords_fn(_substring)(
-        coords, F.lit(start).cast("double"), F.lit(end).cast("double")
-    )
+    return gu.geom_udf(_substring, COORDS_TYPE)(gu.coords(coords), _dbl(start), _dbl(end))
 
 
 def frechet(coords_a: Column, coords_b: Column) -> Column:
     from geo_spark.kernels.lines import frechet_distance
 
-    @F.pandas_udf(T.DoubleType())
-    def udf(ax: pd.Series, ay: pd.Series, bx: pd.Series, by: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                frechet_distance(_np2(ax.iloc[i], ay.iloc[i]), _np2(bx.iloc[i], by.iloc[i]))
-                for i in range(len(ax))
-            ]
-        )
-
-    xa, ya = _xy_cols(coords_a)
-    xb, yb = _xy_cols(coords_b)
-    return udf(xa, ya, xb, yb)
+    return gu.geom_udf(frechet_distance, T.DoubleType())(
+        gu.coords(coords_a), gu.coords(coords_b)
+    )
 
 
 def hausdorff(coords_a: Column, coords_b: Column) -> Column:
     from geo_spark.kernels.lines import hausdorff_distance
 
-    @F.pandas_udf(T.DoubleType())
-    def udf(ax: pd.Series, ay: pd.Series, bx: pd.Series, by: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                hausdorff_distance(_np2(ax.iloc[i], ay.iloc[i]), _np2(bx.iloc[i], by.iloc[i]))
-                for i in range(len(ax))
-            ]
-        )
-
-    xa, ya = _xy_cols(coords_a)
-    xb, yb = _xy_cols(coords_b)
-    return udf(xa, ya, xb, yb)
+    return gu.geom_udf(hausdorff_distance, T.DoubleType())(
+        gu.coords(coords_a), gu.coords(coords_b)
+    )
 
 
 def ring_area_sql(coords: Column) -> Column:
@@ -364,14 +200,7 @@ def coords_to_degrees_sql(coords: Column) -> Column:
 def is_convex(coords: Column) -> Column:
     from geo_spark.kernels.lines import is_ring_convex
 
-    @F.pandas_udf(T.BooleanType())
-    def udf(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        return pd.Series(
-            [bool(is_ring_convex(_np2(xs.iloc[i], ys.iloc[i]))) for i in range(len(xs))]
-        )
-
-    x, y = _xy_cols(coords)
-    return udf(x, y)
+    return gu.geom_udf(lambda c: bool(is_ring_convex(c)), T.BooleanType())(gu.coords(coords))
 
 
 def closest_point_col(coords: Column, px, py) -> Column:
@@ -382,22 +211,9 @@ def closest_point_col(coords: Column, px, py) -> Column:
     """
     from geo_spark.kernels.lines import closest_point_on_line
 
-    @F.pandas_udf("struct<kind:string,x:double,y:double>")
-    def udf(axs: pd.Series, ays: pd.Series, xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
-        kinds, qx, qy = [], [], []
-        for i in range(len(axs)):
-            r = closest_point_on_line(
-                _np2(axs.iloc[i], ays.iloc[i]), float(xs.iloc[i]), float(ys.iloc[i])
-            )
-            kinds.append(None if r is None else r[0])
-            qx.append(None if r is None else r[1])
-            qy.append(None if r is None else r[2])
-        return pd.DataFrame({"kind": kinds, "x": qx, "y": qy})
-
-    px = F.lit(px).cast("double") if not isinstance(px, Column) else px
-    py = F.lit(py).cast("double") if not isinstance(py, Column) else py
-    x, y = _xy_cols(coords)
-    return udf(x, y, px, py)
+    return gu.geom_udf(closest_point_on_line, "struct<kind:string,x:double,y:double>")(
+        gu.coords(coords), _dbl(px), _dbl(py)
+    )
 
 
 def geometry_distance_cols(kind_a: Column, coords_a: Column, kind_b: Column, coords_b: Column) -> Column:
@@ -416,21 +232,12 @@ def geometry_distance_cols(kind_a: Column, coords_a: Column, kind_b: Column, coo
             return ("LineString", arr)
         return ("Polygon", [arr])
 
-    @F.pandas_udf(T.DoubleType())
-    def udf(
-        ka: pd.Series, ax: pd.Series, ay: pd.Series,
-        kb: pd.Series, bx: pd.Series, by: pd.Series,
-    ) -> pd.Series:
-        out = []
-        for i in range(len(ka)):
-            ga = mk(ka.iloc[i], _np2(ax.iloc[i], ay.iloc[i]))
-            gb = mk(kb.iloc[i], _np2(bx.iloc[i], by.iloc[i]))
-            out.append(geometry_distance(ga, gb))
-        return pd.Series(out, dtype="float64")
+    def distance(ka, a, kb, b):
+        return geometry_distance(mk(ka, a), mk(kb, b))
 
-    xa, ya = _xy_cols(coords_a)
-    xb, yb = _xy_cols(coords_b)
-    return udf(kind_a, xa, ya, kind_b, xb, yb)
+    return gu.geom_udf(distance, T.DoubleType())(
+        kind_a, gu.coords(coords_a), kind_b, gu.coords(coords_b)
+    )
 
 
 def centroid(coords: Column, kind: str = "polygon") -> Column:
@@ -438,18 +245,7 @@ def centroid(coords: Column, kind: str = "polygon") -> Column:
     from geo_spark.kernels.area import linestring_centroid, polygon_centroid
 
     fn = polygon_centroid if kind == "polygon" else linestring_centroid
-
-    @F.pandas_udf("struct<x:double,y:double>")
-    def udf(axs: pd.Series, ays: pd.Series) -> pd.DataFrame:
-        xs, ys = [], []
-        for i in range(len(axs)):
-            p = fn(_np2(axs.iloc[i], ays.iloc[i]))
-            xs.append(None if p is None else p[0])
-            ys.append(None if p is None else p[1])
-        return pd.DataFrame({"x": xs, "y": ys})
-
-    x, y = _xy_cols(coords)
-    return udf(x, y)
+    return gu.geom_udf(fn, "struct<x:double,y:double>")(gu.coords(coords))
 
 
 def utm_project(lon: Column, lat: Column) -> Column:

@@ -70,3 +70,30 @@ def test_distributed_unary_union(spark):
     total = sum(abs(ring_signed_area(ext)) for ext, _ in result)
     assert total == pytest.approx(16 * 25.0 + 4.0)
     assert len(result) == 2  # the merged block + the island
+
+
+def test_distributed_unary_union_ring_of_squares_keeps_its_hole(spark):
+    # 8 unit squares around an empty centre share one level-0 cell, so level
+    # 0 already merges them into one polygon with a hole; every later merge
+    # level and the driver fold must carry that hole through
+    rows = []
+    for i in range(3):
+        for j in range(3):
+            if (i, j) != (1, 1):
+                p = _poly_row(float(i), float(j), 1.0)
+                rows.append(
+                    (len(rows), p["exterior"], p["interiors"], float(i), float(j), i + 1.0, j + 1.0)
+                )
+    df = spark.createDataFrame(
+        rows,
+        schema="polygon_id long, exterior array<struct<x:double,y:double>>, "
+        "interiors array<array<struct<x:double,y:double>>>, "
+        "xmin double, ymin double, xmax double, ymax double",
+    )
+    result = distributed_unary_union(df, res=4, merge_levels=2)
+    from geo_spark.kernels.area import polygon_unsigned_area
+
+    assert len(result) == 1
+    ext, holes = result[0]
+    assert len(holes) == 1
+    assert polygon_unsigned_area(ext, holes) == pytest.approx(8.0)

@@ -86,3 +86,19 @@ def test_lsh_pair_joins_are_equi_joins(spark):
     ):
         plan = _plan(df)
         assert "CartesianProduct" not in plan, plan[:2000]
+
+
+def test_coords_output_evaluates_the_udf_once(spark):
+    # a coords-returning geometry UDF is one Arrow UDF evaluated once: no
+    # second Python node and no second UDF attribute for the x/y output
+    import re
+
+    from geo_spark.operators.scalar import simplify_rdp
+
+    df = spark.createDataFrame(
+        [(0, [{"x": 0.0, "y": 0.0}, {"x": 1.0, "y": 0.1}, {"x": 2.0, "y": 0.0}])],
+        "gid long, coords array<struct<x:double,y:double>>",
+    )
+    plan = _plan(df.select("gid", simplify_rdp(F.col("coords"), 0.5).alias("s")))
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert len(set(re.findall(r"pythonUDF\d+", plan))) == 1, plan
