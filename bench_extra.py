@@ -3,7 +3,9 @@
 Usage:
   python bench_extra.py q <name> [<name>...]   # min-of-3 per query after warmup
   python bench_extra.py flagship               # flagship stage breakdown
-  python bench_extra.py explain <name> [out]   # .explain('formatted') to stdout/file
+  python bench_extra.py explain <name> [out]   # .explain('formatted') to stdout/file,
+                                               # expression and plan ids blanked so
+                                               # two checkouts' plans diff cleanly
 
 Same session config as bench.py (local[$SPARK_GRAFT_CPUS], shuffle=max(cpus,8)).
 Timing methodology mirrors bench.py: noop sink, one warmup, min of 3.
@@ -13,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -67,6 +70,7 @@ def explain_query(name, out_path=None):
     spark = _spark()
     df = e.queries()[name](spark, sf_dir)
     txt = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    txt = re.sub(r"plan_id=\d+", "plan_id=", re.sub(r"#\d+", "#", txt))
     if out_path:
         with open(out_path, "w") as f:
             f.write(txt)

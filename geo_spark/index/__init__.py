@@ -3,9 +3,7 @@ from geo_spark.index.cells import (  # noqa: F401
     cell_encode,
     cell_decode,
     cell_parent,
-    cell_bounds,
     cover_bbox,
     cover_polygon,
-    neighbor_ring,
     disk_cells,
 )

@@ -4,7 +4,8 @@ Plays the role H3/S2 plays in the north-star design: a hierarchical,
 integer-keyed spatial grid used for
 
 - equi-join candidate generation (points ⋈ polygon covering cells),
-- kNN ring expansion (``neighbor_ring`` / ``disk_cells``),
+- kNN ring expansion (``disk_cells``; the Spark-side twin is
+  ``functions.neighbor_cells``),
 - tile assignment and rollup (parent = drop 2 bits per level, the Spark-side
   ``shiftright(cell, 2*(maxres-res))`` trick),
 - range partitioning (``repartitionByRange`` on the cell id gives spatial
@@ -91,17 +92,6 @@ def cell_parent(cells, steps: int = 1) -> np.ndarray:
     if (new_res < 0).any():
         raise ValueError("cannot take parent above resolution 0")
     return _from_grid(ix >> steps, iy >> steps, int(new_res[0]) if new_res.ndim else int(new_res))
-
-
-def cell_bounds(cell: int) -> tuple[float, float, float, float]:
-    """(xmin, ymin, xmax, ymax) of one cell."""
-    res, ix, iy = cell_decode(np.asarray([cell]))
-    n = 1 << int(res[0])
-    w = 360.0 / n
-    h = 180.0 / n
-    xmin = -180.0 + int(ix[0]) * w
-    ymin = -90.0 + int(iy[0]) * h
-    return (xmin, ymin, xmin + w, ymin + h)
 
 
 def cover_bbox(xmin, ymin, xmax, ymax, res: int) -> np.ndarray:
@@ -309,26 +299,6 @@ def cover_polygons(polys, res: int):
     full = (~seg_hits) & inside
     cells = _from_grid(ix[keep], iy[keep], res)
     return cells, pidx[keep], full[keep]
-
-
-def neighbor_ring(cell: int, k: int) -> np.ndarray:
-    """Cells at Chebyshev distance exactly ``k`` (the H3 'ring' analogue)."""
-    res, ix, iy = cell_decode(np.asarray([cell]))
-    res = int(res[0])
-    n = 1 << res
-    cx, cy = int(ix[0]), int(iy[0])
-    out = []
-    for dx in range(-k, k + 1):
-        for dy in range(-k, k + 1):
-            if max(abs(dx), abs(dy)) != k:
-                continue
-            x, y = cx + dx, cy + dy
-            if 0 <= y < n:
-                out.append(((x % n), y))  # wrap longitude
-    if not out:
-        return np.empty(0, dtype=np.int64)
-    arr = np.asarray(out, dtype=np.int64)
-    return _from_grid(arr[:, 0], arr[:, 1], res)
 
 
 def disk_cells(cells, k: int) -> tuple[np.ndarray, np.ndarray]:

@@ -3,11 +3,13 @@
 DBSCAN re-expressed for Spark (reference semantics:
 ``geo/src/algorithm/dbscan.rs:113-174``):
 
-1. pick a resolution whose cells are at least 2×epsilon wide, so every
-   point's epsilon-neighborhood is covered by its home cell plus the ring of
-   8 neighbors;
+1. pick the finest resolution whose cells are at least 2×epsilon tall
+   (``functions.res_for_cell_height``), so every point's
+   epsilon-neighborhood is covered by its home cell plus the ring of 8
+   neighbors;
 2. replicate each point to neighbor cells whose rect lies within epsilon
-   (halo replication — pure SQL: clamp-distance from point to cell rect);
+   (``halo_cells``: the grid's 3×3 explode ``functions.neighbor_cells``
+   filtered by the clamp distance from point to cell rect — pure SQL);
 3. run the exact local DBSCAN kernel per cell over home+halo points
    (``applyInPandas``) — core/noise decisions for home points are exact
    because their whole neighborhood is present;
@@ -41,50 +43,24 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geo_spark.functions import _Z_BITS, _spread_bits_col
+from geo_spark.functions import neighbor_cells, res_for_cell_height
 from geo_spark.operators.route import fetch_if_small
 
 
-def _res_for_epsilon(epsilon: float) -> int:
-    """Finest resolution with cell height >= 2*epsilon (lat cells are the
-    smaller dimension: 180/2^r degrees)."""
-    res = 0
-    while res < 20 and 180.0 / (1 << (res + 1)) >= 2.0 * epsilon:
-        res += 1
-    return res
-
-
-def _with_halo_cells(df: DataFrame, lon: str, lat: str, epsilon: float, res: int) -> DataFrame:
-    """Explode each point to (cell, is_home) rows: home cell + every neighbor
-    cell whose rect is within epsilon (clamp distance, pure SQL)."""
+def halo_cells(df: DataFrame, lon: str, lat: str, epsilon: float, res: int) -> DataFrame:
+    """Explode each point to (``_cell``, ``_is_home``) rows: its home cell
+    plus every neighbor cell whose rect is within ``epsilon`` (clamp
+    distance from the point to the cell rect, pure SQL)."""
     n = 1 << res
     w = 360.0 / n
     h = 180.0 / n
-    ix = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(w)).cast("long")
-    iy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(h)).cast("long")
-    ix = F.greatest(F.lit(0), F.least(ix, F.lit(n - 1)))
-    iy = F.greatest(F.lit(0), F.least(iy, F.lit(n - 1)))
-    df = df.withColumn("_ix", ix).withColumn("_iy", iy)
-    offs = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                     for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-    df = df.withColumn("_o", F.explode(offs))
-    nx = F.pmod(F.col("_ix") + F.col("_o.dx"), F.lit(n))
-    ny = F.col("_iy") + F.col("_o.dy")
-    df = df.filter((ny >= 0) & (ny < n))
-    cxmin = F.lit(-180.0) + nx * F.lit(w)
-    cymin = F.lit(-90.0) + ny * F.lit(h)
+    df = neighbor_cells(df, lon, lat, res, with_grid=True)
+    cxmin = F.lit(-180.0) + F.col("_nx") * F.lit(w)
+    cymin = F.lit(-90.0) + F.col("_ny") * F.lit(h)
     ddx = F.greatest(cxmin - F.col(lon), F.col(lon) - (cxmin + F.lit(w)), F.lit(0.0))
     ddy = F.greatest(cymin - F.col(lat), F.col(lat) - (cymin + F.lit(h)), F.lit(0.0))
-    is_home = (F.col("_o.dx") == 0) & (F.col("_o.dy") == 0)
-    df = df.filter(is_home | (ddx * ddx + ddy * ddy <= F.lit(epsilon * epsilon)))
-    z = _spread_bits_col(nx.cast("long")).bitwiseOR(
-        F.shiftleft(_spread_bits_col(ny.cast("long")), 1)
-    )
-    return (
-        df.withColumn("_cell", F.lit(res << _Z_BITS).bitwiseOR(z).cast("long"))
-        .withColumn("_is_home", is_home)
-        .drop("_ix", "_iy", "_o")
-    )
+    keep = F.col("_is_home") | (ddx * ddx + ddy * ddy <= F.lit(epsilon * epsilon))
+    return df.filter(keep).drop("_nx", "_ny")
 
 
 def _canon_driver(edge_rows, key_rows, spark) -> DataFrame | None:
@@ -236,9 +212,9 @@ def dbscan(
     the local kernel already computes it — no extra join or shuffle.
     """
     if res is None:
-        res = _res_for_epsilon(epsilon)
+        res = res_for_cell_height(2.0 * epsilon)
     spark = points.sparkSession
-    pts = _with_halo_cells(
+    pts = halo_cells(
         points.select(id_col, lon_col, lat_col), lon_col, lat_col, epsilon, res
     )
 
@@ -320,8 +296,8 @@ def lof(
     its home cell; otherwise the standard cell-local approximation.
     """
     if res is None:
-        res = _res_for_epsilon(epsilon_halo)
-    pts = _with_halo_cells(
+        res = res_for_cell_height(2.0 * epsilon_halo)
+    pts = halo_cells(
         points.select(id_col, lon_col, lat_col), lon_col, lat_col, epsilon_halo, res
     )
 

@@ -67,27 +67,29 @@ def _input_bytes(df: DataFrame) -> int | None:
     return total
 
 
-_SHUFFLE_NODE_RE = None
+# optimized-plan operators that plan an exchange
+_SHUFFLE_NODES = frozenset({
+    "Join", "Aggregate", "Window", "Sort", "Repartition", "RepartitionByExpression",
+    "RebalancePartitions", "Deduplicate", "Distinct", "Intersect", "Except",
+})
 
 
 def _plan_has_shuffle(df: DataFrame) -> bool:
     """True when the optimized logical plan contains an exchange-inducing
-    operator (join/aggregate/window/sort/repartition/distinct). Driver-side
-    string probe only — never runs a job. Conservative on failure."""
-    global _SHUFFLE_NODE_RE
-    import re
-
-    if _SHUFFLE_NODE_RE is None:
-        _SHUFFLE_NODE_RE = re.compile(
-            r"^\s*[+:-]*\s*'?(Join|Aggregate|Window|Sort|Repartition|"
-            r"RepartitionByExpression|Rebalance|Deduplicate|Distinct|Intersect|Except)\b",
-            re.M,
-        )
+    operator (join/aggregate/window/sort/repartition/distinct) at any depth.
+    Walks the plan's node names on the driver — never runs a job.
+    Conservative on failure."""
     try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        stack = [df._jdf.queryExecution().optimizedPlan()]
+        while stack:
+            node = stack.pop()
+            if node.nodeName() in _SHUFFLE_NODES:
+                return True
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
     except Exception:
         return True
-    return bool(_SHUFFLE_NODE_RE.search(plan))
+    return False
 
 
 def ensure_parallelism(

@@ -1,10 +1,12 @@
 """Within-distance (range) join: all pairs closer than a threshold.
 
 Cell-grid candidate generation (same shape as the kNN join, SURVEY §2.7
-"range/distance join"): pick the finest resolution whose cells are at least
-``max_dist`` wide, explode the left side to its 3×3 cell neighborhood, and
-equi-join the right side on the cell id — every pair within ``max_dist`` is
-guaranteed to co-locate. The exact distance filter then runs JVM-side.
+"range/distance join", on the grid ``geo_spark.functions`` owns): pick the
+finest resolution whose cells are at least ``max_dist`` tall
+(``res_for_cell_height``), explode the left side to its 3×3 cell
+neighborhood (``neighbor_cells``), and equi-join the right side on the cell
+id — every pair within ``max_dist`` is guaranteed to co-locate. The exact
+distance filter (``distance_col``) then runs JVM-side.
 
 Metrics: 'planar' / 'planar_sq' (degrees) or 'haversine' (meters). For
 haversine, the latitude ring stays ±1 (degree cells never shrink
@@ -22,17 +24,11 @@ from pyspark.sql import functions as F
 from geo_spark.functions import (
     MEAN_EARTH_RADIUS,
     cell_encode_col,
-    euclidean_meters,
-    haversine_meters,
+    distance_col,
+    lon_ring_width_col,
+    neighbor_cells,
+    res_for_cell_height,
 )
-from geo_spark.operators.knn_join import _lon_ring_width_col, _with_disk_cells
-
-
-def _res_for_distance(dist_deg: float) -> int:
-    res = 0
-    while res < 20 and 180.0 / (1 << (res + 1)) >= dist_deg:
-        res += 1
-    return res
 
 
 def within_distance_join(
@@ -57,27 +53,20 @@ def within_distance_join(
         dist_deg = max_dist / 111_000.0
     else:
         raise ValueError(f"unknown metric: {metric}")
-    res = _res_for_distance(dist_deg)
+    res = res_for_cell_height(dist_deg)
     if metric == "haversine":
         # longitudinal reach: Δλ_deg ≤ 90·d/(R·cos φmax) — the ring width
         # helper divides by cos(φmax) per row and clamps to a full wrap
         need_lon = F.lit(90.0 * max_dist / MEAN_EARTH_RADIUS)
-        lon_ring = _lon_ring_width_col(F.col("_llat"), res, need_lon_deg=need_lon)
+        lon_ring = lon_ring_width_col(F.col("_llat"), res, need_lon_deg=need_lon)
 
     l = left.select(left_id, F.col("lon").alias("_llon"), F.col("lat").alias("_llat"))
     r = right.select(right_id, F.col("lon").alias("_rlon"), F.col("lat").alias("_rlat"))
-    ld = _with_disk_cells(l, "_llon", "_llat", res, lon_ring=lon_ring)
+    ld = neighbor_cells(l, "_llon", "_llat", res, lon_ring=lon_ring)
     rd = r.withColumn("_cell", cell_encode_col("_rlon", "_rlat", res))
     cand = ld.join(rd, "_cell").drop("_cell")
 
-    if metric == "haversine":
-        dist = haversine_meters("_llon", "_llat", "_rlon", "_rlat")
-    elif metric == "planar":
-        dist = euclidean_meters("_llon", "_llat", "_rlon", "_rlat")
-    else:
-        dx = F.col("_llon") - F.col("_rlon")
-        dy = F.col("_llat") - F.col("_rlat")
-        dist = dx * dx + dy * dy
+    dist = distance_col(metric, "_llon", "_llat", "_rlon", "_rlat")
 
     out = cand.withColumn("dist", dist).filter(F.col("dist") <= F.lit(max_dist))
     if dedup_pairs:

@@ -1,8 +1,7 @@
 """Column surface for ellipsoidal geodesic measures (Karney parity).
 
 Reference: ``Geodesic`` distance/bearing/destination
-(``line_measures/metric_spaces/geodesic.rs``) and ``GeodesicArea``
-(``geodesic_area.rs``). The kernels (kernels/geodesic.py) solve the exact
+(``line_measures/metric_spaces/geodesic.rs``). The kernels (kernels/geodesic.py) solve the exact
 direct/inverse problems; these wrappers run them per Arrow batch. The
 inverse problem is inherently iterative per row (bracketed root-find on the
 departure azimuth), so this is a pandas UDF by necessity, not a shortcut —
@@ -11,7 +10,6 @@ the haversine/rhumb columns remain pure SQL for the spherical fast path.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -64,37 +62,3 @@ def geodesic_destination(lon, lat, bearing_deg, dist_m) -> Column:
         return pd.DataFrame({"lon": lon2, "lat": lat2})
 
     return udf(*cols)
-
-
-def _rings_np(rings: pd.Series):
-    return [
-        np.asarray([(c["x"], c["y"]) for c in r], dtype=np.float64) for r in rings
-    ]
-
-
-def geodesic_area_signed_col(ring: Column) -> Column:
-    """Signed WGS84 area (m², CCW positive) of a ring column — every edge of
-    the Arrow batch goes through ONE vectorized solver pass
-    (``rings_area_perimeter_batch``, ~13× the per-ring scalar loop)."""
-
-    @F.pandas_udf(T.DoubleType())
-    def udf(rings: pd.Series) -> pd.Series:
-        from geo_spark.kernels.geodesic import WGS84
-
-        areas, _ = WGS84.rings_area_perimeter_batch(_rings_np(rings))
-        return pd.Series(areas)
-
-    return udf(ring)
-
-
-def geodesic_perimeter_col(ring: Column) -> Column:
-    """WGS84 geodesic perimeter (m) of a ring column (batched solver)."""
-
-    @F.pandas_udf(T.DoubleType())
-    def udf(rings: pd.Series) -> pd.Series:
-        from geo_spark.kernels.geodesic import WGS84
-
-        _, perims = WGS84.rings_area_perimeter_batch(_rings_np(rings))
-        return pd.Series(perims)
-
-    return udf(ring)

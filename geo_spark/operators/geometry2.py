@@ -239,8 +239,8 @@ def voronoi_distributed(
     """
     import math
 
-    from geo_spark.functions import _Z_BITS, _spread_bits_col
-    from geo_spark.operators.cluster import _with_halo_cells
+    from geo_spark.functions import cell_encode_col, neighbor_cells
+    from geo_spark.operators.cluster import halo_cells
 
     gcol = group_col
     if gcol is None:
@@ -320,7 +320,7 @@ def voronoi_distributed(
         res = max(1, min(18, round(math.log2(180.0 / max(tile_h, 1e-9)))))
     h = min(180.0 / (1 << res), 8.0 * spacing)
 
-    halo = _with_halo_cells(s, lon_col, lat_col, h, res)
+    halo = halo_cells(s, lon_col, lat_col, h, res)
 
     ring_t = "array<struct<x:double,y:double>>"
     schema1 = (
@@ -362,20 +362,6 @@ def voronoi_distributed(
     done = p1.filter("certified").select(gcol, id_col, lon_col, lat_col, "cell_ring")
     todo = p1.filter("NOT certified").select(gcol, id_col, lon_col, lat_col, "r").cache()
 
-    def tile_at(rk: int, lon, lat):
-        nn = 1 << rk
-        w = 360.0 / nn
-        hh = 180.0 / nn
-        ix = F.greatest(F.lit(0), F.least(
-            F.floor((lon + F.lit(180.0)) / F.lit(w)).cast("long"), F.lit(nn - 1)))
-        iy = F.greatest(F.lit(0), F.least(
-            F.floor((lat + F.lit(90.0)) / F.lit(hh)).cast("long"), F.lit(nn - 1)))
-        return ix, iy
-
-    def zkey(rk: int, ix, iy):
-        z = _spread_bits_col(ix).bitwiseOR(F.shiftleft(_spread_bits_col(iy), 1))
-        return F.lit(rk << _Z_BITS).bitwiseOR(z).cast("long")
-
     schema2 = (
         f"{gcol} {gtype}, {id_col} {itype}, {lon_col} double, {lat_col} double, "
         f"cell_ring {ring_t}"
@@ -413,34 +399,20 @@ def voronoi_distributed(
         rk = res
         while rk > 0 and 180.0 / (1 << rk) < 2.0 * rmax:
             rk -= 1
-        nn = 1 << rk
-        offs = F.array(*[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-        ])
-        ix, iy = tile_at(rk, F.col(lon_col), F.col(lat_col))
-        u = (
-            todo.withColumn("_ix", ix).withColumn("_iy", iy)
-            .withColumn("_o", F.explode(offs))
-            .withColumn("_jx", F.pmod(F.col("_ix") + F.col("_o.dx"), F.lit(nn)))
-            .withColumn("_jy", F.col("_iy") + F.col("_o.dy"))
-            .filter((F.col("_jy") >= 0) & (F.col("_jy") < nn))
-            .select(
-                F.col(gcol).alias("_sgrp"),
-                F.col(id_col).alias("_sid"),
-                F.col(lon_col).alias("_slon"),
-                F.col(lat_col).alias("_slat"),
-                F.col("r").alias("_r"),
-                zkey(rk, F.col("_jx"), F.col("_jy")).alias("_tile"),
-            )
+        u = neighbor_cells(todo, lon_col, lat_col, rk).select(
+            F.col(gcol).alias("_sgrp"),
+            F.col(id_col).alias("_sid"),
+            F.col(lon_col).alias("_slon"),
+            F.col(lat_col).alias("_slat"),
+            F.col("r").alias("_r"),
+            F.col("_cell").alias("_tile"),
         )
-        bx, by = tile_at(rk, F.col(lon_col), F.col(lat_col))
         bucketed = s.select(
             F.col(gcol).alias("_sgrp"),
             F.col(id_col).alias("_cand_id"),
             F.col(lon_col).alias("_clon"),
             F.col(lat_col).alias("_clat"),
-            zkey(rk, bx, by).alias("_tile"),
+            cell_encode_col(lon_col, lat_col, rk).alias("_tile"),
         )
         d2 = (F.col("_clon") - F.col("_slon")) ** 2 + (F.col("_clat") - F.col("_slat")) ** 2
         cand = (

@@ -6,7 +6,8 @@ candidates come from a cell-grid equi-join —
 
 1. both sides get a Z-order cell id at a resolution chosen so a ring cell
    neighborhood is expected to hold ≥ k targets;
-2. each query explodes to its ring of neighbor cells (``disk_cells``) and
+2. each query explodes to its ring of neighbor cells
+   (``functions.neighbor_cells``, the grid every cell join shares) and
    equi-joins targets on the cell id — a plain shuffle join Catalyst/AQE can
    re-plan and skew-split. For the haversine metric the longitude ring is
    widened per row by ~1/cos(lat) so that the ring covers the same metric
@@ -18,7 +19,7 @@ candidates come from a cell-grid equi-join —
    the radius the ring provably covered (so a full-looking top-k built from
    in-ring decoys can never mask a true neighbor outside the ring).
    Uncertified queries retry against a coarser resolution (4 levels up →
-   16× cell area) with the same certificate, and as a last resort the
+   16× the cell side) with the same certificate, and as a last resort the
    remaining stragglers (a tiny set by construction) brute-force against the
    full target table — the exactness backstop.
 
@@ -37,89 +38,15 @@ from pyspark.storagelevel import StorageLevel
 from geo_spark.functions import (
     MEAN_EARTH_RADIUS,
     cell_encode_col,
-    euclidean_meters,
-    haversine_meters,
+    distance_col,
+    lon_ring_width_col,
+    neighbor_cells,
 )
 
 # meters per degree of latitude on the haversine sphere (R = 6371008.8)
 _M_PER_DEG = math.pi * MEAN_EARTH_RADIUS / 180.0
-
-
-def _lon_ring_width_col(lat_col, res: int, need_lon_deg=None):
-    """Per-row half-width (in cells) of the longitude ring at ``res``.
-
-    Rigorous coverage bound: for two points within the block's latitude
-    band, haversine distance d and longitude separation Δλ (degrees) obey
-    d ≥ (2/π)·R·cos(φmax)·Δλ_rad, i.e. Δλ_deg ≤ 90·d/(R·cos φmax).
-    Given a required longitudinal reach ``need_lon_deg`` (a Column, degrees)
-    the ring must span ceil(need/lon_cell_width) cells. With no explicit
-    need, the ring is sized so its longitudinal metric reach matches the
-    ±1-cell latitudinal reach: wx = ceil((π/4)/cos φmax) (lon cells are 2×
-    as wide as lat cells in degrees).
-    """
-    n = 1 << res
-    lon_w = 360.0 / n
-    h_lat = 180.0 / n
-    eff_lat = F.least(F.abs(lat_col) + F.lit(2.0 * h_lat), F.lit(89.999))
-    cos_max = F.cos(F.radians(eff_lat))
-    if need_lon_deg is None:
-        wx = F.ceil(F.lit(math.pi / 4.0) / cos_max)
-    else:
-        wx = F.ceil(need_lon_deg / F.lit(lon_w) / cos_max)
-    return F.least(F.greatest(wx, F.lit(1)), F.lit(n // 2 + 1)).cast("int")
-
-
-def _with_disk_cells(df: DataFrame, lon: str, lat: str, res: int, lon_ring=None) -> DataFrame:
-    """Explode each row into its cell-ring neighborhood at ``res`` (pure SQL).
-
-    ``lon_ring``: optional Column — per-row half-width of the longitude ring
-    in cells (default 1 → the classic 3×3 block). Latitude stays ±1 because
-    degree-cells never shrink latitudinally. Neighbors are computed in grid
-    space (ix±dx, iy±1 → re-interleave) with Column math only; longitude
-    wraps, latitude clamps at the poles.
-    """
-    n = 1 << res
-    ix = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    iy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
-    ix = F.greatest(F.lit(0), F.least(ix, F.lit(n - 1))).cast("long")
-    iy = F.greatest(F.lit(0), F.least(iy, F.lit(n - 1))).cast("long")
-    df = df.withColumn("_ix", ix).withColumn("_iy", iy)
-    if lon_ring is None:
-        offsets = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                            for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
-    else:
-        # variable-width ring: flatten sequence(-wx..wx) × (-1,0,1)
-        offsets = F.flatten(
-            F.transform(
-                F.sequence(-lon_ring, lon_ring),
-                lambda dx: F.array(*[
-                    F.struct(dx.cast("int").alias("dx"), F.lit(dy).alias("dy"))
-                    for dy in (-1, 0, 1)
-                ]),
-            )
-        )
-    df = df.withColumn("_o", F.explode(offsets))
-    nx = F.pmod(F.col("_ix") + F.col("_o.dx"), F.lit(n))  # lon wraps
-    ny = F.col("_iy") + F.col("_o.dy")
-    df = df.filter((ny >= 0) & (ny < n))
-    from geo_spark.functions import _spread_bits_col, _Z_BITS
-
-    z = _spread_bits_col(nx).bitwiseOR(F.shiftleft(_spread_bits_col(ny.cast("long")), 1))
-    return df.withColumn("_cell", F.lit(res << _Z_BITS).bitwiseOR(z).cast("long")).drop(
-        "_ix", "_iy", "_o"
-    )
-
-
-def _dist_col(metric: str, qlon, qlat, tlon, tlat):
-    if metric == "haversine":
-        return haversine_meters(qlon, qlat, tlon, tlat)
-    if metric == "planar":
-        return euclidean_meters(qlon, qlat, tlon, tlat)
-    if metric == "planar_sq":
-        dx = F.col(qlon) - F.col(tlon)
-        dy = F.col(qlat) - F.col(tlat)
-        return dx * dx + dy * dy
-    raise ValueError(f"unknown metric: {metric}")
+# levels an uncertified query's retry ring steps up (16× the cell side)
+_COARSE_RETRY_LEVELS = 4
 
 
 def _covered_radius_col(metric: str, lat_col, res: int):
@@ -140,7 +67,7 @@ def _covered_radius_col(metric: str, lat_col, res: int):
     # haversine (meters)
     eff_lat = F.least(F.abs(lat_col) + F.lit(2.0 * h_lat), F.lit(89.999))
     cos_max = F.cos(F.radians(eff_lat))
-    wx = _lon_ring_width_col(lat_col, res)
+    wx = lon_ring_width_col(lat_col, res)
     lat_cover = F.lit(_M_PER_DEG * h_lat)
     lon_cover = F.lit((4.0 / math.pi) * _M_PER_DEG * h_lat) * cos_max * wx.cast("double")
     # full longitude wrap (2·wx+1 ≥ n): the ring covers every lon column, so
@@ -160,7 +87,6 @@ def knn_join(
     metric: str = "haversine",
     query_id: str = "qid",
     target_id: str = "tid",
-    coarse_retry_levels: int = 4,
     exclude_self: bool = False,
     stats_out: dict | None = None,
 ) -> DataFrame:
@@ -169,25 +95,25 @@ def knn_join(
     ``queries`` needs (query_id, lon, lat); ``targets`` (target_id, lon, lat).
     Exact for every metric: results are certified against the ring's covered
     radius; uncertified queries retry at progressively coarser levels
-    (``res - coarse_retry_levels``, ``res - 2·coarse_retry_levels``, … down
-    to level 1), and only the remainder still uncertified at level 1 — a
-    provably sparse tail (its 3×3 neighborhood at level 1 spans ≥ a
-    hemisphere) — takes the brute cross-join. ``stats_out`` (tests): filled
-    with ``brute_queries`` = the brute remainder count.
+    (``res - 4``, ``res - 8``, … down to level 1), and only the remainder
+    still uncertified at level 1 — a provably sparse tail (its 3×3
+    neighborhood at level 1 spans ≥ a hemisphere) — takes the exhaustive
+    level-1 join. ``stats_out`` (tests, perfbench): filled with
+    ``brute_queries`` = that remainder's count.
     """
     q = queries.select(query_id, F.col("lon").alias("_qlon"), F.col("lat").alias("_qlat"))
     t = targets.select(target_id, F.col("lon").alias("_tlon"), F.col("lat").alias("_tlat"))
 
     def topk(cand: DataFrame) -> DataFrame:
-        d = cand.withColumn("dist", _dist_col(metric, "_qlon", "_qlat", "_tlon", "_tlat"))
+        d = cand.withColumn("dist", distance_col(metric, "_qlon", "_qlat", "_tlon", "_tlat"))
         if exclude_self:
             d = d.filter(F.col(query_id) != F.col(target_id))
         w = Window.partitionBy(query_id).orderBy(F.col("dist").asc(), F.col(target_id).asc())
         return d.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
     def candidates_at(qdf: DataFrame, res_: int) -> DataFrame:
-        ring = _lon_ring_width_col(F.col("_qlat"), res_) if metric == "haversine" else None
-        qd = _with_disk_cells(qdf, "_qlon", "_qlat", res_, lon_ring=ring)
+        ring = lon_ring_width_col(F.col("_qlat"), res_) if metric == "haversine" else None
+        qd = neighbor_cells(qdf, "_qlon", "_qlat", res_, lon_ring=ring)
         if ring is not None or res_ <= 1:
             # a full-wrap lon ring (near the poles) — or the static ±1 ring at
             # res ≤ 1 where n ≤ 2 columns exist — revisits cells after pmod;
@@ -218,9 +144,8 @@ def knn_join(
     # target-side shuffle map stages have run)
     n_strag = stragglers.count()
     level = res
-    step = max(coarse_retry_levels, 1)
     while level > 1 and n_strag > 0:
-        level = max(level - step, 1)
+        level = max(level - _COARSE_RETRY_LEVELS, 1)
         if level == 1:
             break
         retry = topk(candidates_at(stragglers, level)).persist(

@@ -13,28 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geo_spark.functions import _Z_BITS, cell_encode_col, cell_parent_col
-
-
-def _unspread_bits_col(v):
-    """Gather even bit positions into the low bits (inverse of spreading)."""
-    m = F.lit
-    v = v.bitwiseAND(m(0x5555555555555555))
-    v = (v.bitwiseOR(F.shiftrightunsigned(v, 1))).bitwiseAND(m(0x3333333333333333))
-    v = (v.bitwiseOR(F.shiftrightunsigned(v, 2))).bitwiseAND(m(0x0F0F0F0F0F0F0F0F))
-    v = (v.bitwiseOR(F.shiftrightunsigned(v, 4))).bitwiseAND(m(0x00FF00FF00FF00FF))
-    v = (v.bitwiseOR(F.shiftrightunsigned(v, 8))).bitwiseAND(m(0x0000FFFF0000FFFF))
-    v = (v.bitwiseOR(F.shiftrightunsigned(v, 16))).bitwiseAND(m(0x00000000FFFFFFFF))
-    return v
-
-
-def cell_xy_cols(cell):
-    """Decode a cell id into (ix, iy) grid Columns — pure SQL bit math."""
-    cell = F.col(cell) if isinstance(cell, str) else cell
-    z = cell.bitwiseAND(F.lit((1 << _Z_BITS) - 1))
-    ix = _unspread_bits_col(z)
-    iy = _unspread_bits_col(F.shiftrightunsigned(z, 1))
-    return ix.cast("long"), iy.cast("long")
+from geo_spark.functions import cell_encode_col, cell_parent_col, cell_xy_cols
 
 
 def tile_counts(

@@ -194,3 +194,16 @@ def test_dedup_tiered_duplicate_heavy_stays_linear(spark):
     dups = [r for r in rows if r["tier"] == "exact"]
     assert len(dups) == n - 50 - 1
     assert all(r["dup_of"] == 50 for r in dups)  # min id of the dup class
+
+
+def test_plan_has_shuffle_sees_nested_exchanges(spark):
+    # an aggregate nested under a union prints as ":  +- Aggregate"; the
+    # probe must still report the shuffle, or ensure_parallelism falls
+    # through to getNumPartitions, which runs the subtree under AQE
+    from geo_spark.operators.dedup import _plan_has_shuffle
+
+    agg = spark.range(100).groupBy((F.col("id") % 7).alias("k")).agg(F.count("*").alias("n"))
+    plain = spark.range(10).select(F.col("id").alias("k"), (F.col("id") * 2).alias("n"))
+    assert _plan_has_shuffle(agg.sample(0.5, seed=1).unionByName(plain))
+    assert _plan_has_shuffle(agg)
+    assert not _plan_has_shuffle(plain)

@@ -6,10 +6,12 @@ from pyspark.sql import functions as F
 from geo_spark.functions import (
     cell_encode_col,
     cell_parent_col,
+    cell_xy_cols,
     haversine_meters,
+    neighbor_cells,
     rhumb_meters,
 )
-from geo_spark.index.cells import cell_encode, cell_parent
+from geo_spark.index.cells import cell_decode, cell_encode, cell_parent, disk_cells
 from geo_spark.kernels import haversine_distance, rhumb_distance
 
 
@@ -45,6 +47,40 @@ def test_cell_parent_sql_matches_numpy(spark):
     # parent of the encode == encode at coarser res
     coarser = cell_encode(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), 8)
     assert (pdf["parent"].to_numpy() == coarser).all()
+
+
+def test_cell_xy_sql_matches_numpy_decode(spark):
+    for res in (1, 7, 20, 26):
+        pdf = _coords_df(spark).withColumn("cell", cell_encode_col("lon", "lat", res))
+        ix, iy = cell_xy_cols("cell")
+        pdf = pdf.select("cell", ix.alias("ix"), iy.alias("iy")).toPandas()
+        _, exp_x, exp_y = cell_decode(pdf["cell"].to_numpy())
+        assert (pdf["ix"].to_numpy() == exp_x).all()
+        assert (pdf["iy"].to_numpy() == exp_y).all()
+
+
+def test_neighbor_cells_sql_matches_numpy_disk(spark):
+    # rows on the antimeridian (both signs) and at both poles: longitude
+    # wraps, rows past a pole are dropped, and at res 1 the wrap visits the
+    # other column twice — compared as per-row multisets
+    from collections import Counter
+
+    lonlat = _coords_df(spark, 200).select("lon", "lat").toPandas()
+    rows = list(lonlat.itertuples(index=False, name=None)) + [
+        (-180.0, 0.0), (180.0, 0.0), (179.999, 45.0), (-179.999, -45.0),
+        (0.0, 90.0), (0.0, -90.0), (-180.0, 90.0), (180.0, -90.0),
+    ]
+    df = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(rows)],
+        "rid long, lon double, lat double",
+    )
+    for res in (1, 2, 3, 4):
+        pts = df.withColumn("home", cell_encode_col("lon", "lat", res)).toPandas()
+        got = neighbor_cells(df, "lon", "lat", res).select("rid", "_cell").toPandas()
+        src, nb = disk_cells(pts["home"].to_numpy(), 1)
+        rids = pts["rid"].to_numpy()
+        expected = Counter(zip(rids[src].tolist(), nb.tolist()))
+        assert Counter(zip(got["rid"].tolist(), got["_cell"].tolist())) == expected, res
 
 
 def test_haversine_sql_matches_numpy(spark):

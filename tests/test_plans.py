@@ -102,3 +102,28 @@ def test_coords_output_evaluates_the_udf_once(spark):
     plan = _plan(df.select("gid", simplify_rdp(F.col("coords"), 0.5).alias("s")))
     assert plan.count("ArrowEvalPython") == 1, plan
     assert len(set(re.findall(r"pythonUDF\d+", plan))) == 1, plan
+
+
+def test_within_distance_haversine_is_cell_equi_join(spark):
+    # candidates come from an equi-join on the cell id after the per-row
+    # longitude-ring explode — never a cartesian or nested-loop pair scan
+    import re
+
+    from geo_spark.operators.distance_join import within_distance_join
+
+    pts = spark.range(200).select(
+        F.col("id").alias("pid"),
+        (F.col("id") * 1.7 % 360 - 180).alias("lon"),
+        (F.col("id") * 0.9 % 180 - 90).alias("lat"),
+    )
+    out = within_distance_join(
+        pts.withColumnRenamed("pid", "lid"), pts.withColumnRenamed("pid", "rid"),
+        5000.0, metric="haversine",
+    )
+    plan = _plan(out)
+    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
+    assert "Generate explode" in plan, plan
+    assert any(
+        re.search(rf"{j} \[_cell#\d+L\], \[_cell#\d+L\], Inner", plan)
+        for j in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin")
+    ), plan

@@ -100,7 +100,7 @@ def test_distributed_plan_is_multi_task(spark, route_budget):
         [(int(i), float(x), float(y)) for i, (x, y) in enumerate(pts)],
         "site_id long, lon double, lat double",
     )
-    from geo_spark.operators.cluster import _with_halo_cells
+    from geo_spark.operators.cluster import halo_cells
 
     # the operator's own tiling choice at this density must split the data
     import math
@@ -109,7 +109,7 @@ def test_distributed_plan_is_multi_task(spark, route_budget):
     res = max(1, min(18, round(math.log2(180.0 / tile_h))))
     h = min(180.0 / (1 << res), 8.0 * math.sqrt(area / n))
     n_tiles = (
-        _with_halo_cells(df, "lon", "lat", h, res).select("_cell").distinct().count()
+        halo_cells(df, "lon", "lat", h, res).select("_cell").distinct().count()
     )
     assert n_tiles >= 8, n_tiles
     out = voronoi_distributed(df)
