@@ -7,7 +7,8 @@ Usage:
                                                # expression and plan ids blanked so
                                                # two checkouts' plans diff cleanly
 
-Same session config as bench.py (local[$SPARK_GRAFT_CPUS], shuffle=max(cpus,8)).
+Session from get_spark, sized to the host like every other entry point
+(local[$SPARK_GRAFT_CPUS or the host's CPU count], shuffle=max(cpus,8)).
 Timing methodology mirrors bench.py: noop sink, one warmup, min of 3.
 """
 
@@ -25,12 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 def _spark():
     from geo_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    return get_spark(
-        app_name="geo_spark_bench_extra",
-        master=f"local[{cpus}]",
-        shuffle_partitions=max(cpus, 8),
-    )
+    return get_spark(app_name="geo_spark_bench_extra")
 
 
 def _noop(df):

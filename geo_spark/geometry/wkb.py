@@ -9,9 +9,10 @@ little-endian on write, and round-trips the (kind, data) structures of
 ``geo_spark.geometry.wkt`` exactly.
 
 The Spark surface (``polygon_from_wkb``) decodes a BinaryType column into
-the engine's array<struct<x,y>> ring columns with one vectorized pandas UDF
-— geometry lands in columnar form once at the scan edge and every
-downstream operator stays on the native columns.
+the engine's array<struct<x,y>> ring columns with one Arrow UDF, written
+through the geometry adapter's encoders — geometry lands in columnar form
+once at the scan edge and every downstream operator stays on the native
+columns.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 _PT, _LS, _PG, _MPT, _MLS, _MPG, _GC = 1, 2, 3, 4, 5, 6, 7
 
@@ -182,31 +183,33 @@ def polygon_from_wkb(wkb_col):
     """BinaryType column of WKB polygons → struct(exterior, interiors).
 
     MultiPolygons with one member decode to that member; others raise (use
-    a multipolygon-aware scan for true multi inputs). NULL-safe.
+    a multipolygon-aware scan for true multi inputs). NULL-safe: a NULL
+    buffer gives a NULL struct.
     """
     from pyspark.sql import functions as F
 
-    @F.pandas_udf(
-        "struct<exterior:array<struct<x:double,y:double>>,"
-        "interiors:array<array<struct<x:double,y:double>>>>"
-    )
-    def udf(bufs: pd.Series) -> pd.DataFrame:
-        exts, ints = [], []
-        for b in bufs:
-            if b is None:
-                exts.append(None)
-                ints.append(None)
-                continue
-            kind, data = parse_wkb(b)
-            if kind == "MultiPolygon" and len(data) == 1:
-                kind, data = "Polygon", data[0]
-            if kind != "Polygon":
-                raise ValueError(f"expected WKB Polygon, got {kind}")
-            exts.append([{"x": float(x), "y": float(y)} for x, y in data[0]])
-            ints.append(
-                [[{"x": float(x), "y": float(y)} for x, y in ring] for ring in data[1:]]
-            )
-        return pd.DataFrame({"exterior": exts, "interiors": ints})
+    from geo_spark.operators.geom_udf import encode_coords, encode_rings
+
+    def rings_of(buf) -> list:
+        kind, data = parse_wkb(buf)
+        if kind == "MultiPolygon" and len(data) == 1:
+            kind, data = "Polygon", data[0]
+        if kind != "Polygon":
+            raise ValueError(f"expected WKB Polygon, got {kind}")
+        return data
+
+    def decode(bufs: pa.Array) -> pa.Array:
+        polys = [None if b is None else rings_of(b) for b in bufs.to_pylist()]
+        rings = [p or [[]] for p in polys]  # NULL rows: an empty ring under the mask
+        return pa.StructArray.from_arrays(
+            [encode_coords([r[0] for r in rings]), encode_rings([r[1:] for r in rings])],
+            names=["exterior", "interiors"],
+            mask=pa.array([p is None for p in polys]),
+        )
 
     col = wkb_col if not isinstance(wkb_col, str) else F.col(wkb_col)
-    return udf(col)
+    return F.arrow_udf(
+        decode,
+        "struct<exterior:array<struct<x:double,y:double>>,"
+        "interiors:array<array<struct<x:double,y:double>>>>",
+    )(col)

@@ -12,7 +12,8 @@ kind ∈ 'point' | 'linestring' | 'polygon';
   linestring → rings = [coords]
   polygon    → rings = [exterior, hole, ...]   (closed rings)
 
-Column ops (vectorized pandas UDFs over Arrow batches):
+Column ops (Arrow UDFs; members decode through the geometry adapter's
+``read_rings``, and ``gc_overlay`` encodes through its ``encode_rings``):
   - ``gc_centroid``: dimension-phase centroid (``centroid.rs:36`` /
     JTS Centroid — the rule certified by the conformance corpus via
     kernels/area.centroid_phases).
@@ -20,15 +21,20 @@ Column ops (vectorized pandas UDFs over Arrow batches):
     (``validation/mod.rs`` rules — geom2.validate_polygon), linestrings need
     two distinct points, points need finite coords.
   - ``gc_dimension``: max member dimension (HasDimensions — empty → -1).
+  - ``gc_overlay``: heterogeneous boolean op of two GC columns.
+
+NULL collections read as empty ones.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from geo_spark.operators.geom_udf import encode_rings, list_array, list_rows, read_rings
 
 COORD = T.StructType(
     [T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType())]
@@ -43,97 +49,64 @@ GC_TYPE = T.ArrayType(
 )
 
 
-def _member_components(members):
-    """Flatten one GC cell into (pts, lines, polys) numpy components."""
-    pts, lines, polys = [], [], []
-    if members is None:
-        members = []
-    for m in members:
-        kind = (m["kind"] or "").lower()
-        raw = m["rings"]
-        rings = [
-            np.asarray([(c["x"], c["y"]) for c in ring], dtype=np.float64)
-            for ring in (raw if raw is not None else [])
-        ]
-        if kind == "empty":  # sentinel for the empty collection (_nonempty)
-            continue
+def _read_gc(arr: pa.Array) -> list:
+    """GC_TYPE array → per row, its members as the overlay kernel's parts:
+    ``("Point", xy)`` per point, ``("LineString", coords)`` per non-empty
+    line, ``("Polygon", [exterior, *holes])``."""
+    kinds, rings = arr.values.flatten()
+    members = []
+    for kind, rs in zip(kinds.to_pylist(), read_rings(rings)):
+        kind = (kind or "").lower()
         if kind == "point":
-            for ring in rings:
-                for x, y in ring:
-                    pts.append((float(x), float(y)))
+            members.append([("Point", xy) for r in rs for xy in r])
         elif kind == "linestring":
-            for ring in rings:
-                if len(ring):
-                    lines.append(ring)
+            members.append([("LineString", r) for r in rs if len(r)])
         elif kind == "polygon":
-            if rings:
-                polys.append((rings[0], rings[1:]))
+            members.append([("Polygon", rs)] if rs else [])
         else:
             raise ValueError(f"unknown GC member kind: {kind}")
+    return [[p for m in row for p in m] for row in list_rows(arr, members, [])]
+
+
+def _components(parts):
+    """Overlay parts → the (pts, lines, polys) components of one GC."""
+    pts = [(float(d[0]), float(d[1])) for k, d in parts if k == "Point"]
+    lines = [d for k, d in parts if k == "LineString"]
+    polys = [(d[0], d[1:]) for k, d in parts if k == "Polygon"]
     return pts, lines, polys
 
 
-def _nonempty(gc: Column) -> Column:
-    """Empty member arrays → a one-member 'empty' sentinel before the Arrow
-    transfer: this environment's Spark→pandas serializer segfaults when a
-    batch holds ONLY empty/null cells of the deeply-nested GC type
-    (array<struct<string,array<array<struct>>>>). The sentinel keeps every
-    list non-empty; ``_member_components`` skips the 'empty' kind, so the
-    UDFs still see the empty collection."""
-    sentinel = F.struct(
-        F.lit("empty").alias("kind"),
-        F.array(
-            F.array(F.struct(F.lit(0.0).alias("x"), F.lit(0.0).alias("y")))
-        ).alias("rings"),
-    )
-    return F.when(F.size(gc) > 0, gc).otherwise(F.array(sentinel))
-
-
 def gc_centroid(gc: Column) -> Column:
-    """struct<x,y> — dimension-phase centroid of a tagged-GC column."""
+    """struct<x,y> — dimension-phase centroid of a tagged-GC column (NULL
+    for the empty collection)."""
     from geo_spark.kernels.area import centroid_phases
 
-    @F.pandas_udf("struct<x:double,y:double>")
-    def udf(cells: pd.Series) -> pd.DataFrame:
-        xs, ys = [], []
-        for members in cells:
-            c = centroid_phases(*_member_components(members))
-            xs.append(None if c is None else c[0])
-            ys.append(None if c is None else c[1])
-        return pd.DataFrame({"x": xs, "y": ys})
+    xy = pa.struct([("x", pa.float64()), ("y", pa.float64())])
 
-    res = udf(_nonempty(gc))
-    # struct-of-nulls → NULL struct (the empty collection has no centroid).
-    # Referencing `res` twice does NOT re-run the UDF: ExtractPythonUDFs
-    # dedups the equal PythonUDF subtrees into one ArrowEvalPython attribute
-    # (verified on this Spark: plan shows a single pythonUDF0, and an
-    # accumulator in the UDF counts exactly one batch per partition).
-    return F.when(res["x"].isNotNull(), res)
+    def centroid(cells: pa.Array) -> pa.Array:
+        out = [centroid_phases(*_components(parts)) for parts in _read_gc(cells)]
+        return pa.array(
+            [None if c is None else {"x": c[0], "y": c[1]} for c in out], type=xy, from_pandas=True
+        )
+
+    return F.arrow_udf(centroid, "struct<x:double,y:double>")(gc)
 
 
 def gc_is_valid(gc: Column) -> Column:
     """boolean — every member passes its type's validation rules."""
     from geo_spark.kernels.geom2 import validate_polygon
 
-    @F.pandas_udf(T.BooleanType())
-    def udf(cells: pd.Series) -> pd.Series:
-        out = []
-        for members in cells:
-            ok = True
-            pts, lines, polys = _member_components(members)
-            for x, y in pts:
-                if not (np.isfinite(x) and np.isfinite(y)):
-                    ok = False
-            for line in lines:
-                if len(np.unique(line, axis=0)) < 2:
-                    ok = False
-            for ext, holes in polys:
-                if validate_polygon(ext, holes):
-                    ok = False
-            out.append(ok)
-        return pd.Series(out, dtype="boolean")
+    def valid(pts, lines, polys) -> bool:
+        return (
+            all(np.isfinite(x) and np.isfinite(y) for x, y in pts)
+            and all(len(np.unique(line, axis=0)) >= 2 for line in lines)
+            and not any(validate_polygon(ext, holes) for ext, holes in polys)
+        )
 
-    return udf(_nonempty(gc))
+    def is_valid(cells: pa.Array) -> pa.Array:
+        return pa.array([valid(*_components(parts)) for parts in _read_gc(cells)], pa.bool_())
+
+    return F.arrow_udf(is_valid, T.BooleanType())(gc)
 
 
 def gc_dimension(gc: Column) -> Column:
@@ -148,66 +121,21 @@ def gc_dimension(gc: Column) -> Column:
     )
 
 
-def _components_to_members(pts, segs, polys):
-    """(pts, segs, polys) from the mixed overlay → tagged-GC member list."""
-    members = []
-    for ext, holes in polys:
-        rings = [np.asarray(ext, dtype=np.float64)] + [
-            np.asarray(h, dtype=np.float64) for h in holes
-        ]
-        members.append(
-            {
-                "kind": "polygon",
-                "rings": [
-                    [{"x": float(x), "y": float(y)} for x, y in r] for r in rings
-                ],
-            }
-        )
-    for a, b in segs:
-        members.append(
-            {
-                "kind": "linestring",
-                "rings": [[
-                    {"x": float(a[0]), "y": float(a[1])},
-                    {"x": float(b[0]), "y": float(b[1])},
-                ]],
-            }
-        )
-    for x, y in sorted(pts):
-        members.append(
-            {"kind": "point", "rings": [[{"x": float(x), "y": float(y)}]]}
-        )
-    return members
-
-
-def _members_to_geom(members):
-    """Tagged-GC cell → (kind, data) geometry for the overlay kernel."""
-    parts = []
-    if members is None:
-        members = []
-    for m in members:
-        kind = (m["kind"] or "").lower()
-        raw = m["rings"]
-        rings = [
-            np.asarray([(c["x"], c["y"]) for c in ring], dtype=np.float64)
-            for ring in (raw if raw is not None else [])
-        ]
-        if kind == "empty":
-            continue
-        if kind == "point":
-            for ring in rings:
-                for x, y in ring:
-                    parts.append(("Point", np.asarray([x, y], dtype=np.float64)))
-        elif kind == "linestring":
-            for ring in rings:
-                if len(ring):
-                    parts.append(("LineString", ring))
-        elif kind == "polygon":
-            if rings:
-                parts.append(("Polygon", rings))
-        else:
-            raise ValueError(f"unknown GC member kind: {kind}")
-    return ("GeometryCollection", parts)
+def _encode_gc(pts_segs_polys: list) -> pa.Array:
+    """Per row, the mixed overlay's (pts, segs, polys) → GC_TYPE: polygon
+    members, then line members, then the points in sorted order."""
+    rows = [
+        [("polygon", [ext, *holes]) for ext, holes in polys]
+        + [("linestring", [[a, b]]) for a, b in segs]
+        + [("point", [[p]]) for p in sorted(pts)]
+        for pts, segs, polys in pts_segs_polys
+    ]
+    flat = [m for r in rows for m in r]
+    members = pa.StructArray.from_arrays(
+        [pa.array([k for k, _ in flat], pa.string()), encode_rings([rs for _, rs in flat])],
+        names=["kind", "rings"],
+    )
+    return list_array([len(r) for r in rows], members)
 
 
 def gc_overlay(gc_a: Column, gc_b: Column, op: str) -> Column:
@@ -221,18 +149,14 @@ def gc_overlay(gc_a: Column, gc_b: Column, op: str) -> Column:
     same kernel evaluates ~670 JTS mixed-dimension corpus cases.
     """
 
-    @F.pandas_udf(GC_TYPE)
-    def udf(ca: pd.Series, cb: pd.Series) -> pd.Series:
+    def overlay(ca: pa.Array, cb: pa.Array) -> pa.Array:
         from geo_spark.kernels.overlay_mixed import mixed_overlay
 
-        out = []
-        for i in range(len(ca)):
-            ga = _members_to_geom(ca.iloc[i])
-            gb = _members_to_geom(cb.iloc[i])
-            pts, segs, polys = mixed_overlay(ga, gb, op)
-            out.append(_components_to_members(pts, segs, polys))
-        return pd.Series(out)
+        return _encode_gc(
+            [
+                mixed_overlay(("GeometryCollection", a), ("GeometryCollection", b), op)
+                for a, b in zip(_read_gc(ca), _read_gc(cb))
+            ]
+        )
 
-    res = udf(_nonempty(gc_a), _nonempty(gc_b))
-    # empty result list → sentinel-free empty GC stays an empty array
-    return res
+    return F.arrow_udf(overlay, GC_TYPE)(gc_a, gc_b)

@@ -8,6 +8,13 @@ arrays in that shape: coords → one array, rings → a list of arrays,
 polygon → two arguments (exterior, list of holes), multipolygon → a list of
 (exterior, holes) pairs. NULL geometry decodes to an empty array / list.
 
+The same decoder and encoders serve the operators that are not per-row:
+the PIP join decodes its fetched polygon table and its executor-side
+cover batches with ``read_polygons``; the tagged-GC ops
+(``operators/gc.py``) read and write member rings with ``read_rings`` /
+``encode_rings``; ``wkb.polygon_from_wkb`` writes through
+``encode_coords`` / ``encode_rings``.
+
 Wire format
 -----------
 Geometry columns cross into Python as Arrow's own nested lists: the UDF is
@@ -79,8 +86,9 @@ _EMPTY = np.empty((0, 2), dtype=np.float64)
 # --- decoding: one pyarrow array → one value per row ---------------------------
 
 
-def _rows(arr: pa.Array, items: list, null) -> list:
-    """Slice ``items`` (the decoded child of list array ``arr``) per row."""
+def list_rows(arr: pa.Array, items: list, null) -> list:
+    """Slice ``items`` (the decoded child of list array ``arr``) per row;
+    NULL rows get ``null``."""
     offs = arr.offsets.to_numpy()
     if arr.null_count == 0:
         return [items[offs[i] : offs[i + 1]] for i in range(len(arr))]
@@ -92,12 +100,12 @@ def read_coords(arr: pa.Array) -> list:
     """``array<struct<x,y>>`` → one (n,2) float64 array per row."""
     x, y = arr.values.flatten()
     xy = np.column_stack((x.to_numpy(zero_copy_only=False), y.to_numpy(zero_copy_only=False)))
-    return _rows(arr, xy, _EMPTY)
+    return list_rows(arr, xy, _EMPTY)
 
 
 def read_rings(arr: pa.Array) -> list:
     """``array<array<struct<x,y>>>`` → one list of (n,2) rings per row."""
-    return _rows(arr, read_coords(arr.values), [])
+    return list_rows(arr, read_coords(arr.values), [])
 
 
 def read_polygons(exterior: pa.Array, interiors: pa.Array) -> list:
@@ -107,13 +115,14 @@ def read_polygons(exterior: pa.Array, interiors: pa.Array) -> list:
 
 def read_pieces(arr: pa.Array) -> list:
     """``MULTIPOLY_TYPE`` → one list of (exterior, holes) pieces per row."""
-    return _rows(arr, read_polygons(*arr.values.flatten()), [])
+    return list_rows(arr, read_polygons(*arr.values.flatten()), [])
 
 
 # --- encoding: one value per row → one pyarrow array ----------------------------
 
 
-def _nest(lens: list, child: pa.Array) -> pa.Array:
+def list_array(lens: list, child: pa.Array) -> pa.Array:
+    """List array whose rows hold ``lens[i]`` consecutive items of ``child``."""
     offsets = np.zeros(len(lens) + 1, dtype=np.int32)
     np.cumsum(lens, out=offsets[1:])
     return pa.ListArray.from_arrays(pa.array(offsets), child)
@@ -126,12 +135,12 @@ def encode_coords(rows) -> pa.Array:
     pts = pa.StructArray.from_arrays(
         [pa.array(xy[:, 0]), pa.array(xy[:, 1])], names=["x", "y"]
     )
-    return _nest([len(a) for a in arrs], pts)
+    return list_array([len(a) for a in arrs], pts)
 
 
 def encode_rings(rows) -> pa.Array:
     """Lists of rings → ``array<array<struct<x,y>>>``."""
-    return _nest([len(r) for r in rows], encode_coords([ring for r in rows for ring in r]))
+    return list_array([len(r) for r in rows], encode_coords([ring for r in rows for ring in r]))
 
 
 def encode_pieces(rows) -> pa.Array:
@@ -141,7 +150,7 @@ def encode_pieces(rows) -> pa.Array:
         [encode_coords([e for e, _ in flat]), encode_rings([h for _, h in flat])],
         names=["exterior", "interiors"],
     )
-    return _nest([len(r) for r in rows], pieces)
+    return list_array([len(r) for r in rows], pieces)
 
 
 # --- argument shapes -------------------------------------------------------------

@@ -16,10 +16,18 @@ Architecture (SURVEY.md §3.1 "Spark shape"):
    accepted without running the exact kernel (the distributed analogue of
    the interior short-circuit at ``interval_tree_multipolygon.rs:153-158``).
    On real-world polygon sets most matches take this path.
-4. **exact refine**: only partial-cell candidates enter a vectorized pandas
-   UDF running the robust winding-number kernel
-   (kernels.predicates.polygon_position) against a broadcast polygon dict,
-   deserialized once per executor (module-level memo).
+4. **exact refine**: only partial-cell candidates run the robust
+   winding-number kernel (kernels.predicates.polygon_position), inside an
+   Arrow UDF against a broadcast {polygon_id: (exterior, holes)} table.
+   PySpark keeps a broadcast's value once per Python worker process, so
+   the table is unpickled once per worker, not once per batch.
+
+The polygon table reaches the driver as one Arrow fetch and is decoded
+once by the geometry adapter's decoder (``geom_udf.read_polygons``); that
+decoded copy feeds the cover build (driver route) and the broadcast.
+Above the ``pip_join.polygons`` route budget the cover builds on the
+executors (``mapInArrow``, same decoder) and only the compact cover rows
+come back.
 
 Scale notes: the point side is never shuffled (broadcast join + AQE);
 polygon-side explosion is bounded by ``max_cells_per_polygon``; hot cells
@@ -30,84 +38,59 @@ broadcast-hash probe, not a shuffle.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from geo_spark.functions import bbox_contains_point, cell_encode_col
 from geo_spark.index.cells import cover_polygons
-from geo_spark.operators.route import fetch_if_small
+from geo_spark.operators.geom_udf import read_polygons
+from geo_spark.operators.route import fits
 
-# executor-side cache: broadcast id → {polygon_id: (ext, holes)}
-_BC_CACHE: dict = {}
-
-_POLY_COLS = ("polygon_id", "exterior", "interiors", "xmin", "ymin", "xmax", "ymax")
-
-
-def _ring(coords) -> np.ndarray:
-    return np.asarray([(c["x"], c["y"]) for c in coords], dtype=np.float64)
-
-
-def _poly_arrays(exterior, interiors):
-    """(exterior, [holes]) numpy rings from array<struct<x,y>> values — Spark
-    Rows on the driver, Arrow-converted arrays inside pandas batches."""
-    return _ring(exterior), [_ring(r) for r in (interiors if interiors is not None else [])]
+_BBOX = ("xmin", "ymin", "xmax", "ymax")
+_POLY_COLS = ("polygon_id", "exterior", "interiors", *_BBOX)
+_COVER = pa.schema(
+    [("cell", pa.int64()), ("polygon_id", pa.int64()), ("full", pa.bool_())]
+    + [(c, pa.float64()) for c in _BBOX]
+)
 
 
-def _driver_cover_rows(poly_rows, res: int):
-    """Cover rows from already-collected polygon rows — the small-side fast
-    path (admin-boundary scale): the geometry is on the driver anyway for
-    the broadcast refine, and a few hundred covers cost less than a Spark
-    job round-trip. The cover itself is the batched vectorized build
-    (``cover_polygons``) — the per-polygon loop version cost ~0.4 ms/polygon
-    of serial driver time, which dominated every admin-scale PIP query."""
-    polys = [_poly_arrays(r["exterior"], r["interiors"]) for r in poly_rows]
-    cells, pidx, fulls = cover_polygons(polys, res)
-    rows = []
-    for c, i, f in zip(cells.tolist(), pidx.tolist(), fulls.tolist()):
-        r = poly_rows[i]
-        rows.append(
-            (
-                int(c),
-                int(r["polygon_id"]),
-                bool(f),
-                float(r["xmin"]),
-                float(r["ymin"]),
-                float(r["xmax"]),
-                float(r["ymax"]),
-            )
-        )
-    return rows
+def _decode(polys: pa.Table) -> list:
+    """(exterior, holes) numpy rings per row of a ``_POLY_COLS`` table."""
+    return read_polygons(
+        polys["exterior"].combine_chunks(), polys["interiors"].combine_chunks()
+    )
 
 
-def _distributed_cover_rows(polygons: DataFrame, res: int):
+def _cover(polys: pa.Table, geoms: list, res: int) -> pa.Table:
+    """Cover rows (``_COVER``) of ``polys`` whose decoded rings are ``geoms``.
+
+    The cover is the batched vectorized build (``cover_polygons``); each
+    cell row carries its polygon's id and bbox."""
+    cells, pidx, full = cover_polygons(geoms, res)
+    owner = polys.take(pidx)
+    cols = {"cell": cells, "polygon_id": owner["polygon_id"], "full": full}
+    return pa.table({**cols, **{c: owner[c] for c in _BBOX}}).cast(_COVER)
+
+
+def _distributed_cover(polygons: DataFrame, res: int) -> pa.Table:
     """Compute polygon cell covers on the executors, collect only the compact
-    (cell, polygon_id, full, xmin, ymin, xmax, ymax) rows.
+    cover rows (no geometry), sized like the broadcast relation itself.
 
     At ~1M admin polygons even the batched cover build serializes minutes
-    of driver work, so it runs as ``mapInPandas`` — the same
+    of driver work, so it runs as ``mapInArrow`` — the same decode and
     ``cover_polygons`` pass over each Arrow batch — across however many
-    partitions the polygon table has. The collected rows are compact (no
-    geometry), sized like the broadcast relation itself.
+    partitions the polygon table has.
     """
 
-    def fn(it):
-        for pdf in it:
-            polys = [_poly_arrays(e, h) for e, h in zip(pdf["exterior"], pdf["interiors"])]
-            cells, pidx, fulls = cover_polygons(polys, res)
-            out = pdf.iloc[pidx][["polygon_id", "xmin", "ymin", "xmax", "ymax"]]
-            yield out.reset_index(drop=True).assign(cell=cells, full=fulls)
+    def fn(batches):
+        for batch in batches:
+            polys = pa.Table.from_batches([batch])
+            yield from _cover(polys, _decode(polys), res).to_batches()
 
-    schema = (
-        "polygon_id long, xmin double, ymin double, xmax double, ymax double, "
-        "cell long, full boolean"
-    )
-    sdf = polygons.select(*_POLY_COLS).mapInPandas(fn, schema=schema)
-    return [
-        tuple(r)
-        for r in sdf.select("cell", "polygon_id", "full", "xmin", "ymin", "xmax", "ymax").collect()
-    ]
+    return polygons.select(*_POLY_COLS).mapInArrow(fn, from_arrow_schema(_COVER)).toArrow()
 
 
 def choose_res(bbox_rows, target_cells_per_polygon: int = 16, max_res: int = 14) -> int:
@@ -146,32 +129,21 @@ def pip_join_points_polygons(
     """
     spark = points.sparkSession
     # the polygon geometry must land on the driver regardless (broadcast
-    # refine is this operator's contract). Within the route budget, one
-    # fetch feeds both the cover build and the geometry table (a few hundred
-    # covers cost less than a Spark job round-trip). Above it, the cover
-    # builds distributedly (mapInPandas) and the geometry STREAMS to the
-    # driver via toLocalIterator — at the ~1M-polygon contract ceiling this
-    # holds one copy of the geometry (the broadcast dict), not two (the
-    # collected Row list plus the dict).
-    poly_rows = fetch_if_small(polygons.select(*_POLY_COLS), "pip_join.polygons")
-    if poly_rows is not None:
-        if res is None:
-            res = choose_res(poly_rows)
-        cover_rows = _driver_cover_rows(poly_rows, res)
+    # refine is this operator's contract): one Arrow fetch, decoded once.
+    # Within the route budget the same decoded rings feed the cover build (a
+    # few hundred covers cost less than a Spark job round-trip); above it
+    # the cover builds on the executors.
+    polys = polygons.select(*_POLY_COLS).toArrow()
+    if res is None:
+        res = choose_res(polys.select(list(_BBOX)).slice(0, 2048).to_pylist())
+    geoms = _decode(polys)
+    if fits(polys.num_rows, "pip_join.polygons"):
+        cover = _cover(polys, geoms, res)
     else:
-        if res is None:
-            res = choose_res(
-                polygons.select("xmin", "ymin", "xmax", "ymax").limit(2048).collect()
-            )
-        cover_rows = _distributed_cover_rows(polygons, res)
-        poly_rows = polygons.select(
-            "polygon_id", "exterior", "interiors"
-        ).toLocalIterator(prefetchPartitions=True)
-    cover_df = spark.createDataFrame(
-        cover_rows,
-        schema="cell long, polygon_id long, full boolean, "
-        "xmin double, ymin double, xmax double, ymax double",
-    )
+        cover = _distributed_cover(polygons, res)
+    by_id = dict(zip(polys["polygon_id"].to_pylist(), geoms))
+    del polys  # the driver keeps one copy of the geometry: the decoded rings
+    cover_df = spark.createDataFrame(cover)
 
     pts = points.withColumn("_cell", cell_encode_col(lon_col, lat_col, res))
     cand = pts.join(F.broadcast(cover_df), pts["_cell"] == cover_df["cell"], "inner")
@@ -179,28 +151,16 @@ def pip_join_points_polygons(
         bbox_contains_point("xmin", "ymin", "xmax", "ymax", lon_col, lat_col)
     )
 
-    geoms = {
-        int(r["polygon_id"]): _poly_arrays(r["exterior"], r["interiors"])
-        for r in poly_rows
-    }
-    bc = spark.sparkContext.broadcast(geoms)
-    bc_key = f"pip:{id(bc)}:{len(geoms)}"
+    bc = spark.sparkContext.broadcast(by_id)
 
-    @F.pandas_udf(T.ByteType())
-    def position_udf(
-        polygon_id: pd.Series, lon: pd.Series, lat: pd.Series, full: pd.Series
-    ) -> pd.Series:
-        # deserialize the broadcast polygon table once per executor process
-        table = _BC_CACHE.get(bc_key)
-        if table is None:
-            table = bc.value
-            _BC_CACHE[bc_key] = table
+    def position(polygon_id: pa.Array, lon: pa.Array, lat: pa.Array, full: pa.Array) -> pa.Array:
         from geo_spark.kernels.predicates import polygon_position
 
+        by_id = bc.value
         pid = polygon_id.to_numpy()
-        lo = lon.to_numpy(dtype=np.float64)
-        la = lat.to_numpy(dtype=np.float64)
-        is_full = full.to_numpy(dtype=bool)
+        lo = lon.to_numpy(zero_copy_only=False)
+        la = lat.to_numpy(zero_copy_only=False)
+        is_full = full.to_numpy(zero_copy_only=False)
         out = np.ones(len(pid), dtype=np.int8)  # full cells are Inside
         todo = ~is_full
         if todo.any():
@@ -208,9 +168,9 @@ def pip_join_points_polygons(
             idx_t = np.flatnonzero(todo)
             for p in np.unique(pid_t):
                 mask = idx_t[pid_t == p]
-                ext, holes = table[int(p)]
+                ext, holes = by_id[int(p)]
                 out[mask] = polygon_position(lo[mask], la[mask], ext, holes)
-        return pd.Series(out)
+        return pa.array(out)
 
     # full-cell shortcut: one pass — the UDF receives the `full` flag and
     # masks out the winding kernel for interior cells (Arrow still ships
@@ -218,7 +178,9 @@ def pip_join_points_polygons(
     # split would re-scan the upstream source twice.
     cand = cand.withColumn(
         "position",
-        position_udf(F.col("polygon_id"), F.col(lon_col), F.col(lat_col), F.col("full")),
+        F.arrow_udf(position, T.ByteType())(
+            F.col("polygon_id"), F.col(lon_col), F.col(lat_col), F.col("full")
+        ),
     )
 
     if predicate == "contains":

@@ -1,12 +1,13 @@
 """Small-side routing: one budget table and one fetch for every operator
 that keeps a small side on the driver.
 
-An operator with a driver-local fast path (PIP polygons for the broadcast
-refine, Voronoi sites, polygonize linework, DBSCAN witness edges) asks
-``fetch_if_small`` for the rows. One job fetches at most budget+1 rows:
-fewer means the driver route with the rows already in hand, more means the
-distributed route (the fetched rows are discarded). Counts an operator has
-already taken are checked against the same table with ``fits``.
+An operator with a driver-local fast path (Voronoi sites, polygonize
+linework, DBSCAN witness edges) asks ``fetch_if_small`` for the rows. One
+job fetches at most budget+1 rows: fewer means the driver route with the
+rows already in hand, more means the distributed route (the fetched rows
+are discarded). Counts an operator has already taken are checked against
+the same table with ``fits`` — the PIP join, which fetches every polygon
+for its broadcast refine anyway, routes its cover build that way.
 
 A budget of 0 turns the driver route off (no job runs); tests use that to
 run each distributed route on small inputs.

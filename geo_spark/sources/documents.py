@@ -172,8 +172,9 @@ def synth_admin_polygons(
 
 
 def polygons_to_numpy(poly_rows) -> dict:
-    """Collect a polygon DataFrame's rows into {polygon_id: (ext, holes, bbox)}
-    numpy structures — the broadcastable PIP index payload."""
+    """Collected polygon rows → {polygon_id: (ext, holes, bbox)} numpy
+    structures: the brute-force reference the PIP join tests compare
+    against (the join itself decodes through ``geom_udf.read_polygons``)."""
     out = {}
     for r in poly_rows:
         ext = np.asarray([(c["x"], c["y"]) for c in r["exterior"]], dtype=np.float64)

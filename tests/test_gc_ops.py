@@ -12,12 +12,18 @@ def _gc_df(spark, rows):
     )
 
 
+# a 5-vertex shell with a 4-vertex hole: rings of different lengths in one member
+SHELL5 = [(0, 0), (6, 0), (6, 6), (0, 6), (0, 0)]
+HOLE4 = [(1, 1), (1, 3), (3, 1), (1, 1)]
+
+
 def _m(kind, *rings):
     return {"kind": kind, "rings": [[{"x": float(x), "y": float(y)} for x, y in r] for r in rings]}
 
 
 def test_gc_centroid_phase_fallback(spark):
-    from geo_spark.operators.gc import gc_centroid, gc_dimension
+    from geo_spark.kernels.area import centroid_phases
+    from geo_spark.operators.gc import gc_centroid, gc_dimension, gc_is_valid, gc_overlay
 
     sq = [(0, 0), (2, 0), (2, 2), (0, 2), (0, 0)]
     flat = [(0, 0), (4, 0), (0, 0)]  # zero-area polygon → line phase
@@ -30,6 +36,8 @@ def test_gc_centroid_phase_fallback(spark):
         (2, [_m("point", [(1, 1)]), _m("point", [(3, 5)]), _m("linestring", [(5, 9), (5, 9)])]),
         # empty collection → null centroid
         (3, []),
+        # a hole with fewer vertices than the shell
+        (4, [_m("polygon", SHELL5, HOLE4)]),
     ]
     df = _gc_df(spark, rows)
     out = {
@@ -45,9 +53,20 @@ def test_gc_centroid_phase_fallback(spark):
     assert (out[1]["c"]["x"], out[1]["c"]["y"]) == (2.0, 0.0) and out[1]["dim"] == 2
     assert (out[2]["c"]["x"], out[2]["c"]["y"]) == (3.0, 5.0) and out[2]["dim"] == 1
     assert out[3]["c"] is None and out[3]["dim"] == -1
+    want = centroid_phases([], [], [(np.array(SHELL5, float), [np.array(HOLE4, float)])])
+    assert (out[4]["c"]["x"], out[4]["c"]["y"]) == want and out[4]["dim"] == 2
+
+    # a DataFrame holding only empty and NULL collections
+    empty = _gc_df(spark, [(0, []), (1, None)]).select(
+        gc_centroid(F.col("gc")).alias("c"),
+        gc_is_valid(F.col("gc")).alias("ok"),
+        gc_overlay(F.col("gc"), F.col("gc"), "union").alias("u"),
+    )
+    assert [tuple(r) for r in empty.collect()] == [(None, True, [])] * 2
 
 
 def test_gc_is_valid(spark):
+    from geo_spark.kernels.geom2 import validate_polygon
     from geo_spark.operators.gc import gc_is_valid
 
     sq = [(0, 0), (2, 0), (2, 2), (0, 2), (0, 0)]
@@ -57,6 +76,7 @@ def test_gc_is_valid(spark):
         (1, [_m("polygon", bowtie)]),
         (2, [_m("linestring", [(0, 0), (0, 0)])]),  # degenerate line
         (3, [_m("linestring", [(0, 0), (1, 1)])]),
+        (4, [_m("polygon", SHELL5, HOLE4)]),
     ]
     out = {
         r["id"]: r["ok"]
@@ -65,6 +85,8 @@ def test_gc_is_valid(spark):
         .collect()
     }
     assert out[0] is True and out[1] is False and out[2] is False and out[3] is True
+    assert validate_polygon(np.array(SHELL5, float), [np.array(HOLE4, float)]) == []
+    assert out[4] is True
 
 
 def test_gc_centroid_matches_corpus_kernel():
@@ -80,16 +102,19 @@ def test_gc_centroid_matches_corpus_kernel():
 
 
 def test_gc_overlay_mixed_dimensions(spark):
+    from geo_spark.kernels.overlay_mixed import mixed_overlay
     from geo_spark.operators.gc import gc_dimension, gc_overlay
 
     sq = [(0, 0), (4, 0), (4, 4), (0, 4), (0, 0)]
     sq_shift = [(2, 0), (6, 0), (6, 4), (2, 4), (2, 0)]
     sq_touch = [(4, 0), (8, 0), (8, 4), (4, 4), (4, 0)]
+    big = [(-1, -1), (7, -1), (7, 7), (-1, 7), (-1, -1)]
     rows = [
         (0, [_m("polygon", sq)], [_m("polygon", sq_shift)]),   # overlap → polygon
         (1, [_m("polygon", sq)], [_m("polygon", sq_touch)]),   # edge touch → line
         (2, [_m("polygon", sq)], [_m("point", [(2, 2)]), _m("point", [(9, 9)])]),
         (3, [_m("linestring", [(0, 2), (9, 2)])], [_m("polygon", sq)]),
+        (4, [_m("polygon", SHELL5, HOLE4)], [_m("polygon", big)]),
     ]
     df = spark.createDataFrame(
         rows,
@@ -133,6 +158,20 @@ def test_gc_overlay_mixed_dimensions(spark):
                 np.hypot(arr[1:, 0] - arr[:-1, 0], arr[1:, 1] - arr[:-1, 1]).sum()
             )
     assert abs(seg_len - 4.0) < 1e-12
+    # polygon with a ragged hole ∩ a square covering it: the kernel's own
+    # pieces (the polygon, hole kept), ring by ring
+    want_pts, want_segs, want_polys = mixed_overlay(
+        ("GeometryCollection", [("Polygon", [np.array(SHELL5, float), np.array(HOLE4, float)])]),
+        ("GeometryCollection", [("Polygon", [np.array(big, float)])]),
+        "intersection",
+    )
+    assert not want_pts and not want_segs and [len(h) for _, h in want_polys] == [1]
+    assert [m["kind"] for m in got[4]["r"]] == ["polygon"] * len(want_polys)
+    for m, (ext, holes) in zip(got[4]["r"], want_polys):
+        rings = [np.array([(c["x"], c["y"]) for c in r]) for r in m["rings"]]
+        assert len(rings) == 1 + len(holes)
+        for r, w in zip(rings, [ext, *holes]):
+            np.testing.assert_array_equal(r, np.asarray(w, float))
 
 
 def test_gc_overlay_union_absorbs(spark):

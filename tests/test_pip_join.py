@@ -9,7 +9,7 @@ Correctness gates:
 
 The join and hole tests run both small-side routes: the driver cover build
 (polygons within the ``pip_join.polygons`` budget) and the distributed cover
-build with the streamed geometry table (budget 0).
+build (budget 0).
 """
 
 import numpy as np
@@ -27,6 +27,10 @@ from geo_spark.sources.documents import (
 N_DOCS = 3000
 
 both_routes = pytest.mark.parametrize("budget", [20_000, 0], ids=["driver", "distributed"])
+
+
+def _xy(p):
+    return {"x": float(p[0]), "y": float(p[1])}
 
 
 @pytest.fixture(scope="module")
@@ -68,9 +72,19 @@ def test_text_byte_identity(docs, spark):
 def test_pip_join_matches_bruteforce(spark, docs, polys, route_budget, budget):
     route_budget("pip_join.polygons", budget)
     pts = extract_points(docs).cache()
+    # the driver-side work before any action on the result: the polygon
+    # fetch, plus the cover collect on the distributed route
+    sc = spark.sparkContext
+    group = f"pip_join_call_{budget}"
+    sc.setJobGroup(group, group)
+    try:
+        joined = pip_join_points_polygons(pts, polys, predicate="contains")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == (1 if budget else 2)
     result = (
-        pip_join_points_polygons(pts, polys, predicate="contains")
-        .groupBy("polygon_id")
+        joined.groupBy("polygon_id")
         .agg(F.count("*").alias("n"))
         .collect()
     )
@@ -121,6 +135,33 @@ def test_pip_join_hole_semantics(spark, route_budget, budget):
     }
     assert pos == {"in_ring": 1, "in_hole": -1, "on_hole_edge": 0, "on_outer_edge": 0}
 
+    # holes of different vertex counts (a 4-vertex triangle, a 5-vertex
+    # square) in one polygon: the decoder must not assume equal ring lengths
+    ragged = spark.createDataFrame(
+        [
+            (
+                7,
+                [_xy(p) for p in [(0, 0), (10, 0), (10, 10), (0, 10), (0, 0)]],
+                [
+                    [_xy(p) for p in [(1, 1), (4, 1), (1, 4), (1, 1)]],
+                    [_xy(p) for p in [(6, 6), (9, 6), (9, 9), (6, 9), (6, 6)]],
+                ],
+                0.0, 0.0, 10.0, 10.0,
+            )
+        ],
+        "polygon_id long, exterior array<struct<x:double,y:double>>, "
+        "interiors array<array<struct<x:double,y:double>>>, "
+        "xmin double, ymin double, xmax double, ymax double",
+    )
+    pts = spark.createDataFrame(
+        [("in_triangle", 1.5, 1.5), ("in_square", 7.5, 7.5), ("in_shell", 5.0, 5.0)],
+        schema="url string, lon double, lat double",
+    )
+    pos = {
+        r["url"]: r["position"]
+        for r in pip_join_points_polygons(pts, ragged, predicate="position").collect()
+    }
+    assert pos == {"in_triangle": -1, "in_square": -1, "in_shell": 1}
 
 def test_pip_join_intersects_includes_boundary(spark):
     polys = synth_admin_polygons(spark, grid_deg=10.0, with_holes=False)

@@ -31,6 +31,8 @@ def test_extract_is_jvm_only(spark, docs):
 
 
 def test_pip_join_is_broadcast(spark, docs):
+    import re
+
     pts = extract_points(docs)
     polys = synth_admin_polygons(spark, grid_deg=10.0)
     joined = pip_join_points_polygons(pts, polys, predicate="contains")
@@ -38,8 +40,11 @@ def test_pip_join_is_broadcast(spark, docs):
     assert "BroadcastHashJoin" in plan
     # the big point side must not shuffle for the join
     assert "SortMergeJoin" not in plan.split("BroadcastHashJoin")[0]
-    # exact refine runs in Arrow-batched Python, after the bbox filter
-    assert "ArrowEvalPython" in plan
+    # exact refine runs in Arrow-batched Python — one node, one UDF — after
+    # the bbox filter
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert len(set(re.findall(r"pythonUDF\d+", plan))) == 1, plan
+    assert "BatchEvalPython" not in plan
     bbox_idx = plan.find("xmin")
     py_idx = plan.find("ArrowEvalPython")
     assert bbox_idx > py_idx  # deeper in the tree = printed later

@@ -70,13 +70,21 @@ def test_polygon_from_wkb_spark(spark):
 
     ring = np.array([(0, 0), (10, 0), (10, 10), (0, 10), (0, 0)], float)
     hole = np.array([(4, 4), (4, 6), (6, 6), (6, 4), (4, 4)], float)
+    tri = np.array([(1, 1), (2, 1), (1, 2), (1, 1)], float)  # holes of unequal length
     wkb = to_wkb(("Polygon", [ring, hole]))
-    df = spark.createDataFrame([(1, bytearray(wkb)), (2, None)], "id long, wkb binary")
+    wkb2 = to_wkb(("Polygon", [ring, hole, tri]))
+    df = spark.createDataFrame(
+        [(1, bytearray(wkb)), (2, None), (3, bytearray(wkb2))], "id long, wkb binary"
+    )
     out = df.select("id", polygon_from_wkb("wkb").alias("g")).collect()
     g = out[0]["g"]
     assert [(c["x"], c["y"]) for c in g["exterior"]] == [tuple(p) for p in ring]
     assert [(c["x"], c["y"]) for c in g["interiors"][0]] == [tuple(p) for p in hole]
-    assert out[1]["g"] is None or out[1]["g"]["exterior"] is None
+    assert out[1]["g"] is None
+    g = out[2]["g"]
+    assert [[(c["x"], c["y"]) for c in r] for r in g["interiors"]] == [
+        [tuple(p) for p in h] for h in (hole, tri)
+    ]
 
 
 def test_parse_geometrycollection():
