@@ -606,12 +606,7 @@ def _q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole stream-stream join is value-hash gated against DuckDB
     from geo_spark.streaming.joins import run_events_enrich_available_now
 
-    sunk = run_events_enrich_available_now(
-        spark, f"{sf_dir}/events.parquet", sink_name="enrich_sink_q",
-        # two join-state stores per partition: 4 keeps state-store init
-        # proportional to this table (measured best 4 < 8 < 16 at sf0.1)
-        state_partitions=4,
-    )
+    sunk = run_events_enrich_available_now(spark, f"{sf_dir}/events.parquet")
     return sunk.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.round(F.sum("value"), 2).alias("sum_value"),
@@ -2145,15 +2140,9 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup-in-stream (dropDuplicatesWithinWatermark, watermark-bounded
     # state): the surviving first-seen hash set equals the batch DISTINCT —
     # DuckDB verifies it exactly
-    import uuid
-
     from geo_spark.streaming.dedup import run_streaming_dedup_available_now
 
-    sink = f"sdedup_{uuid.uuid4().hex[:10]}"
-    return run_streaming_dedup_available_now(
-        spark, f"{sf_dir}/documents.parquet", sink_name=sink,
-        state_partitions=8,
-    )
+    return run_streaming_dedup_available_now(spark, f"{sf_dir}/documents.parquet")
 
 
 def _q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2161,17 +2150,9 @@ def _q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sessionizer over the events stream (availableNow) is value-identical
     # to the batch window-SQL sessionization, so the same oracle gates a
     # custom stateful streaming operator end-to-end
-    import uuid
-
     from geo_spark.streaming.sessions import run_sessionize_available_now
 
-    sink = f"sess_{uuid.uuid4().hex[:10]}"
-    return run_sessionize_available_now(
-        spark, f"{sf_dir}/events.parquet", sink_name=sink,
-        # the stateful fold is Python-side compute: more state partitions =
-        # more parallel pandas groups (measured 16 > 8 at sf0.1)
-        state_partitions=16,
-    )
+    return run_sessionize_available_now(spark, f"{sf_dir}/events.parquet")
 
 
 def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,7 +21,8 @@ Layout:
                 text stats — DataFrame → DataFrame
     functions/  Spark SQL Column expression builders (JVM-side fast path)
     sources/    deterministic CC-style document synthesizer, lineage writer
-    streaming/  Structured Streaming tile counts
+    streaming/  Structured Streaming: one availableNow runner, tile counts,
+                dedup, sessionization, interval joins
 """
 
 __version__ = "0.1.0"

@@ -1,1 +1,102 @@
-from geo_spark.streaming.tiles import streaming_tile_counts  # noqa: F401
+"""Structured Streaming: one availableNow runner for the streaming operators.
+
+Every ``run_*_available_now`` entry point (dedup, sessionize, interval
+enrich) drains a parquet table through ``run_available_now``: the file
+stream, the memory sink and the wait live here once. State stores inherit
+the session's ``spark.sql.shuffle.partitions``, which ``get_spark`` sizes
+to the host.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import os
+import shutil
+import uuid
+from typing import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+
+
+def as_stream_dir(path: str) -> str:
+    """File-stream sources need a directory; single-file tables are copied
+    once into a content-keyed temp dir.
+
+    The copy lands under a hidden temporary name (ignored by Spark's file
+    listing) and is renamed into place, so an interrupted copy never leaves
+    a truncated table that later runs would read."""
+    if not os.path.isfile(path):
+        return path
+    key = hashlib.md5(f"{path}:{os.path.getmtime(path)}".encode()).hexdigest()[:12]
+    d = f"/tmp/geo_spark_stream/{key}"
+    final = os.path.join(d, "part-0.parquet")
+    if not os.path.isfile(final):
+        os.makedirs(d, exist_ok=True)
+        tmp = os.path.join(d, f".part-0.parquet.{os.getpid()}.tmp")
+        shutil.copy(path, tmp)
+        os.replace(tmp, final)
+    return d
+
+
+class _NoDataBatches:
+    """Temporarily disable the trailing no-data micro-batch while an
+    ``availableNow`` query runs. That batch exists to advance the watermark
+    so APPEND-mode aggregations can finalize; none of this package's
+    streaming operators need it — the inner interval join emits on match,
+    ``dropDuplicatesWithinWatermark`` emits each first-seen row in its data
+    batch, and the ``NoTimeout`` stateful sessionizer emits everything
+    (including the in-progress tail) inside data batches. The skipped batch
+    would only evict state that query termination discards anyway; skipping
+    it removes a fixed ~0.6 s per run (state-store reload + commit + plan)
+    without changing a single output row (oracle-gated)."""
+
+    _KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+    def __init__(self, spark):
+        self.spark = spark
+
+    def __enter__(self):
+        self.prev = self.spark.conf.get(self._KEY, None)
+        self.spark.conf.set(self._KEY, "false")
+
+    def __exit__(self, *exc):
+        if self.prev is not None:
+            self.spark.conf.set(self._KEY, self.prev)
+        else:
+            self.spark.conf.unset(self._KEY)
+
+
+def run_available_now(
+    spark: SparkSession,
+    path: str,
+    build: Callable[[DataFrame], DataFrame],
+    mode: str = "append",
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """Stream the parquet table at ``path`` through ``build`` with one
+    ``availableNow`` run into a memory sink; return the sunk rows.
+
+    ``mode`` is the sink's output mode. ``max_files_per_trigger`` caps the
+    files per micro-batch (None: one batch over everything present). The
+    sink's temp view is dropped before returning — the returned DataFrame
+    keeps its rows, and the session holds no table per call."""
+    d = as_stream_dir(path)
+    reader = spark.readStream.schema(spark.read.parquet(d).schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    out = build(reader.parquet(d))
+    name = f"geo_spark_stream_{uuid.uuid4().hex[:12]}"
+    with _NoDataBatches(spark):
+        query = (
+            out.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            query.awaitTermination()
+            sunk = spark.table(name)
+        finally:
+            spark.catalog.dropTempView(name)
+    return sunk

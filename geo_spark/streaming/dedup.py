@@ -5,82 +5,16 @@ as a stream, each batch drops rows whose ``md5(text)`` was already seen
 within the watermark horizon (``dropDuplicatesWithinWatermark`` — state is
 bounded by the horizon, so a 100 TB stream doesn't accumulate an unbounded
 seen-set; exact global dedup over all time is the batch operator's job).
+``run_streaming_dedup_available_now`` drains a table through the package's
+one availableNow runner and distinct-ifies the sunk hashes.
 """
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def as_stream_dir(path: str) -> str:
-    """File-stream sources need a directory; single-file tables are copied
-    once into a content-keyed temp dir."""
-    if not os.path.isfile(path):
-        return path
-    key = hashlib.md5(f"{path}:{os.path.getmtime(path)}".encode()).hexdigest()[:12]
-    d = f"/tmp/geo_spark_stream/{key}"
-    if not os.path.isdir(d):
-        os.makedirs(d, exist_ok=True)
-        shutil.copy(path, os.path.join(d, "part-0.parquet"))
-    return d
-
-
-class _StatePartitions:
-    """Temporarily override spark.sql.shuffle.partitions while a streaming
-    query STARTS (state-store partitioning is fixed at first start); restores
-    the session setting immediately after. None = no-op (inherit session —
-    the scale-safe default; small drivers pass a small count)."""
-
-    def __init__(self, spark, n):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions", None)
-        if self.n is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        if self.n is None:
-            return
-        if self.prev is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        else:
-            # no prior session value readable: unset rather than leaving the
-            # low streaming override bound to all later batch shuffles
-            self.spark.conf.unset("spark.sql.shuffle.partitions")
-
-
-class _NoDataBatches:
-    """Temporarily disable the trailing no-data micro-batch while an
-    ``availableNow`` query runs. That batch exists to advance the watermark
-    so APPEND-mode aggregations can finalize; none of this package's
-    streaming operators need it — the inner interval join emits on match,
-    ``dropDuplicatesWithinWatermark`` emits each first-seen row in its data
-    batch, and the ``NoTimeout`` stateful sessionizer emits everything
-    (including the in-progress tail) inside data batches. The skipped batch
-    would only evict state that query termination discards anyway; skipping
-    it removes a fixed ~0.6 s per run (state-store reload + commit + plan)
-    without changing a single output row (oracle-gated)."""
-
-    _KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
-
-    def __init__(self, spark):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get(self._KEY, None)
-        self.spark.conf.set(self._KEY, "false")
-
-    def __exit__(self, *exc):
-        if self.prev is not None:
-            self.spark.conf.set(self._KEY, self.prev)
-        else:
-            self.spark.conf.unset(self._KEY)
+from geo_spark.streaming import run_available_now
 
 
 def streaming_dedup_hashes(
@@ -101,36 +35,26 @@ def streaming_dedup_hashes(
 def run_streaming_dedup_available_now(
     spark: SparkSession,
     docs_path: str,
-    sink_name: str = "stream_dedup_sink",
     max_files_per_trigger: int | None = None,
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Run the streaming dedup over a parquet dir/file with availableNow and
     return the deduped hash set as a batch DataFrame."""
-    d = as_stream_dir(docs_path)
-    schema = spark.read.parquet(d).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(d)
-    if "warc_ts" not in stream.columns:
-        # the driver testdata documents table carries no timestamp — derive
-        # a deterministic event time from doc_id (arrival order surrogate)
-        stream = stream.withColumn(
-            "warc_ts",
-            F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-            + F.make_interval(secs=(F.col("doc_id") % 3600).cast("int")),
-        )
-    out = streaming_dedup_hashes(stream)
-    with _StatePartitions(spark, state_partitions), _NoDataBatches(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+
+    def build(stream: DataFrame) -> DataFrame:
+        if "warc_ts" not in stream.columns:
+            # the driver testdata documents table carries no timestamp —
+            # derive a deterministic event time from doc_id (arrival order
+            # surrogate)
+            stream = stream.withColumn(
+                "warc_ts",
+                F.to_timestamp(F.lit("2024-01-01 00:00:00"))
+                + F.make_interval(secs=(F.col("doc_id") % 3600).cast("int")),
+            )
+        return streaming_dedup_hashes(stream)
+
+    sunk = run_available_now(
+        spark, docs_path, build, max_files_per_trigger=max_files_per_trigger
+    )
     # cross-batch duplicates beyond the watermark horizon are legitimate
     # stream semantics; the driver-query surface distinct-ifies
-    return spark.table(sink_name).distinct()
+    return sunk.distinct()

@@ -16,13 +16,18 @@ Two instantiations:
 
 State bound: each side buffers only rows younger than
 watermark + validity; inner join emits exactly the batch-equivalent rows
-(stream==batch parity is pytest-gated).
+(stream==batch parity is pytest-gated, in one batch and across batches).
+``run_events_enrich_available_now`` drains the events table through the
+package's one availableNow runner with ``events_enrich`` as its build step;
+the join-state stores inherit the session's host-sized shuffle partitions.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from geo_spark.streaming import run_available_now
 
 
 def interval_enrich_join(
@@ -88,64 +93,37 @@ def streaming_tile_region_join(
     )
 
 
+def events_enrich(events: DataFrame, validity: str = "7 days") -> DataFrame:
+    """Split ONE events source into the two join sides: 'signup' events are
+    the dimension-version stream (a user's segment becomes effective at
+    signup time and lasts ``validity``); all other events are the fact
+    stream.
+
+    One source feeding both sides (a stream self-join) scans the parquet
+    and tracks offsets once; two sources would double the per-batch read.
+    Watermarks need TIMESTAMP (LTZ); the events table stores NTZ. Both join
+    sides shift identically, so the validity join is timezone-invariant."""
+    src = events.withColumn("ts", F.col("ts").cast("timestamp"))
+    fact = src.filter(F.col("event_type") != "signup")
+    dim = src.filter(F.col("event_type") == "signup").select(
+        "user_id",
+        F.col("ts").alias("effective_ts"),
+        F.col("value").alias("segment_value"),
+    )
+    return interval_enrich_join(
+        fact, dim, key="user_id", fact_ts="ts", dim_ts="effective_ts",
+        validity=validity,
+    )
+
+
 def run_events_enrich_available_now(
     spark: SparkSession,
     events_path: str,
     validity: str = "7 days",
-    sink_name: str = "enrich_sink",
-    state_partitions: int | None = None,
 ) -> DataFrame:
-    """Drive the stream-stream join over the events table with
-    ``availableNow`` triggers: 'signup' events are the dimension-version
-    stream (a user's segment becomes effective at signup time and lasts
-    ``validity``); all other events are the fact stream. Returns the sunk
-    joined rows (append mode — inner interval joins emit exactly the
-    batch-equivalent result).
-
-    ``state_partitions``: override spark.sql.shuffle.partitions for this
-    query's state stores (None = inherit the session setting — the right
-    choice at scale; small drivers pass a small count so state-store init
-    stays proportional to the data)."""
-    from geo_spark.streaming.dedup import as_stream_dir
-
-    path = as_stream_dir(events_path)
-    schema = spark.read.parquet(path).schema
-
-    # ONE file source feeds both join sides (stream self-join): two separate
-    # sources would each scan the parquet and track offsets independently,
-    # doubling the per-batch read. Watermarks need TIMESTAMP (LTZ); the
-    # events table stores NTZ. Both join sides shift identically, so the
-    # validity join is timezone-invariant.
-    src = spark.readStream.schema(schema).parquet(path).withColumn(
-        "ts", F.col("ts").cast("timestamp")
+    """Drive ``events_enrich`` over the events table with ``availableNow``
+    triggers and return the sunk joined rows (append mode — inner interval
+    joins emit exactly the batch-equivalent result)."""
+    return run_available_now(
+        spark, events_path, lambda stream: events_enrich(stream, validity)
     )
-    fact = src.filter(F.col("event_type") != "signup")
-    dim = (
-        src
-        .filter(F.col("event_type") == "signup")
-        .select(
-            "user_id",
-            F.col("ts").alias("effective_ts"),
-            F.col("value").alias("segment_value"),
-        )
-    )
-    joined = interval_enrich_join(
-        fact, dim, key="user_id", fact_ts="ts", dim_ts="effective_ts",
-        validity=validity,
-    )
-    # the join-state stores are partitioned by spark.sql.shuffle.partitions,
-    # fixed at the query's FIRST start; a bounded count keeps the
-    # state-store init cost proportional to the data, not the session's
-    # batch-shuffle setting (restore the session conf right after start)
-    from geo_spark.streaming.dedup import _NoDataBatches, _StatePartitions
-
-    with _StatePartitions(spark, state_partitions), _NoDataBatches(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink_name)

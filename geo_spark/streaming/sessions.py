@@ -13,13 +13,17 @@ State per user: (session_idx, last_ts, n_events, first_event, value_micros)
 the updated in-progress session (update semantics: a later batch that
 extends an open session re-emits it with more events; readers keep the row
 with max n_events per (user_id, session_idx)).
+``run_sessionize_available_now`` drains a table through the package's one
+availableNow runner and applies that max-n_events rule.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from geo_spark.streaming import run_available_now
 
 _OUT_SCHEMA = (
     "user_id long, session_idx long, n_events long, first_event long, "
@@ -87,37 +91,20 @@ def run_sessionize_available_now(
     spark: SparkSession,
     events_path: str,
     gap_sec: int = 1800,
-    sink_name: str = "sessionize_sink",
     max_files_per_trigger: int | None = None,
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Run the stateful sessionizer over a parquet dir with availableNow and
     return the final per-session batch DataFrame.
 
     Re-emitted open sessions (multi-batch runs) are resolved by keeping the
     emission with the most events per (user_id, session_idx)."""
-    from pyspark.sql import Window
-
-    from geo_spark.streaming.dedup import as_stream_dir
-
-    events_path = as_stream_dir(events_path)
-    schema = spark.read.parquet(events_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(events_path)
-    out = sessionize_stateful(stream, gap_sec)
-    from geo_spark.streaming.dedup import _NoDataBatches, _StatePartitions
-    with _StatePartitions(spark, state_partitions), _NoDataBatches(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    sunk = spark.table(sink_name)
+    sunk = run_available_now(
+        spark,
+        events_path,
+        lambda stream: sessionize_stateful(stream, gap_sec),
+        mode="update",
+        max_files_per_trigger=max_files_per_trigger,
+    )
     w = Window.partitionBy("user_id", "session_idx").orderBy(F.col("n_events").desc())
     return (
         sunk.withColumn("_rn", F.row_number().over(w))

@@ -1,4 +1,4 @@
-"""Structured Streaming tile counts + resumable lineage writer."""
+"""Structured Streaming runner and tile counts + resumable lineage writer."""
 
 import os
 import shutil
@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from geo_spark.sources.documents import synth_documents
 from geo_spark.sources.lineage import completed_units, incremental_write
+from geo_spark.streaming import as_stream_dir, run_available_now
 from geo_spark.streaming.tiles import streaming_tile_counts
 
 
@@ -21,27 +22,18 @@ def tmpdir():
 
 def test_streaming_tile_counts_matches_batch(spark, tmpdir):
     src = os.path.join(tmpdir, "stream_src")
-    ckpt = os.path.join(tmpdir, "ckpt")
     docs = synth_documents(spark, 2000)
     # two micro-batch files
     docs.filter("doc_id < 1000").write.mode("overwrite").parquet(src)
     docs.filter("doc_id >= 1000").write.mode("append").parquet(src)
 
-    stream = spark.readStream.schema(docs.schema).parquet(src)
-    agg = streaming_tile_counts(stream, res=3, window="1 hour")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("tiles_stream")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    sunk = run_available_now(
+        spark,
+        src,
+        lambda stream: streaming_tile_counts(stream, res=3, window="1 hour"),
+        mode="complete",
     )
-    q.awaitTermination(120)
-    got = {
-        (r["window_start"], r["tile"]): r["n"]
-        for r in spark.sql("select * from tiles_stream").collect()
-    }
+    got = {(r["window_start"], r["tile"]): r["n"] for r in sunk.collect()}
 
     # batch equivalent over the same data
     from geo_spark.functions import cell_encode_col
@@ -61,6 +53,24 @@ def test_streaming_tile_counts_matches_batch(spark, tmpdir):
     exp = {(r["ws"], r["tile"]): r["n"] for r in exp_rows}
     assert got == exp
     assert sum(got.values()) > 0
+
+
+def test_as_stream_dir_replaces_interrupted_copy(tmp_path):
+    # a run killed mid-copy leaves the keyed dir without its table (and maybe
+    # a partial temp file); the next call must copy again, not reuse the dir
+    table = tmp_path / "t.parquet"
+    table.write_bytes(os.urandom(4096))
+    d = as_stream_dir(str(table))
+    try:
+        final = os.path.join(d, "part-0.parquet")
+        os.remove(final)
+        with open(os.path.join(d, ".part-0.parquet.1.tmp"), "wb") as f:
+            f.write(table.read_bytes()[:100])
+        assert as_stream_dir(str(table)) == d
+        with open(final, "rb") as f:
+            assert f.read() == table.read_bytes()
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_incremental_write_resume(spark, tmpdir):

@@ -26,6 +26,12 @@ def _batch_sessions(spark, path):
     )
 
 
+def _session_state(spark):
+    """The session's table names and active streams: a runner call must
+    leave both as it found them (no memory-sink view left registered)."""
+    return {t.name for t in spark.catalog.listTables()}, spark.streams.active
+
+
 def _as_dict(df):
     return {
         (r.user_id, r.session_idx): (r.n_events, r.first_event, r.value_micros)
@@ -37,7 +43,9 @@ def test_stream_equals_batch_single_batch(spark):
     from geo_spark.streaming.sessions import run_sessionize_available_now
 
     path = "/root/testdata/sf0.001/events.parquet"
-    got = run_sessionize_available_now(spark, path, sink_name="sess_test_single")
+    tables, _ = _session_state(spark)
+    got = run_sessionize_available_now(spark, path)
+    assert _session_state(spark) == (tables, [])
     exp = _batch_sessions(spark, path)
     assert _as_dict(got) == _as_dict(exp)
 
@@ -75,9 +83,7 @@ def test_state_carries_sessions_across_batches(spark, tmp_path):
         # ascending mtimes so file 1 is batch 1
         os.utime(dst, (1700000000 + i * 100, 1700000000 + i * 100))
 
-    got = run_sessionize_available_now(
-        spark, src + "/all", sink_name="sess_test_split", max_files_per_trigger=1
-    )
+    got = run_sessionize_available_now(spark, src + "/all", max_files_per_trigger=1)
     d = _as_dict(got)
     assert d[(1, 1)] == (2, 1, 4000000)
     assert d[(1, 2)] == (3, 3, 3000000)   # 3 events spanning the two batches
@@ -92,12 +98,10 @@ def test_streaming_dedup_matches_batch_distinct(spark):
     from geo_spark.streaming.dedup import run_streaming_dedup_available_now
 
     path = "/root/testdata/sf0.001/documents.parquet"
-    got = {
-        r.text_hash
-        for r in run_streaming_dedup_available_now(
-            spark, path, sink_name="sd_test1"
-        ).collect()
-    }
+    tables, _ = _session_state(spark)
+    sunk = run_streaming_dedup_available_now(spark, path)
+    assert _session_state(spark) == (tables, [])
+    got = {r.text_hash for r in sunk.collect()}
     exp = {
         r.h
         for r in spark.read.parquet(path)
@@ -130,7 +134,5 @@ def test_streaming_dedup_drops_cross_batch_duplicates(spark, tmp_path):
         dst = f"{src}/all/part-{i}.parquet"
         shutil.copy(f"{src}/f{i}/{part}", dst)
         os.utime(dst, (1700000000 + i * 100, 1700000000 + i * 100))
-    got = run_streaming_dedup_available_now(
-        spark, src + "/all", sink_name="sd_test2", max_files_per_trigger=1
-    )
+    got = run_streaming_dedup_available_now(spark, src + "/all", max_files_per_trigger=1)
     assert got.count() == 3  # a, b, c — the second 'a' was stateful-dropped
