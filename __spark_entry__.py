@@ -2027,12 +2027,9 @@ def _q_voronoi_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     sites = _derived_points(spark, sf_dir).filter(F.col("doc_id") % 4 == 0)
     # distributed construction (tile+halo certificates) — no global
     # single-task stage; geometric correctness still PIP-gated below.
-    # persist: pip_join evaluates its polygon side twice (cover collect +
-    # broadcast join) — without this the whole Voronoi plan re-executes
-    # persist is deliberately not unpersisted (the query returns a lazy
-    # plan over it); the rings are ~1 MB at bench scale and Spark's LRU
-    # block eviction bounds accumulation across a long session
-    cells = voronoi_distributed(sites, id_col="doc_id").persist()
+    # pip_join fetches the polygon side once (toArrow) and then joins
+    # against its own local cover, so the cells are not kept
+    cells = voronoi_distributed(sites, id_col="doc_id")
     polys = cells.select(
         F.col("doc_id").alias("polygon_id"),
         F.col("cell_ring").alias("exterior"),

@@ -229,16 +229,6 @@ def cell_parent_col(cell, steps: int) -> Column:
     return F.shiftleft(res - F.lit(steps), _Z_BITS).bitwiseOR(new_z).cast("long")
 
 
-def bbox_intersects(axmin, aymin, axmax, aymax, bxmin, bymin, bxmax, bymax) -> Column:
-    """AABB overlap predicate — the SQL-authored fast-reject conjunct that the
-    reference applies before exact predicates (``intersects/mod.rs:113-127``).
-    Catalyst pushes it below the exchange, pruning candidates pre-pUDF."""
-    cols = [F.col(c) if isinstance(c, str) else c for c in
-            (axmin, aymin, axmax, aymax, bxmin, bymin, bxmax, bymax)]
-    axmin, aymin, axmax, aymax, bxmin, bymin, bxmax, bymax = cols
-    return (axmin <= bxmax) & (axmax >= bxmin) & (aymin <= bymax) & (aymax >= bymin)
-
-
 def bbox_contains_point(xmin, ymin, xmax, ymax, px, py) -> Column:
     """bbox ∋ point prefilter (closed bounds)."""
     cols = [F.col(c) if isinstance(c, str) else c for c in (xmin, ymin, xmax, ymax, px, py)]

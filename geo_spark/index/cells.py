@@ -109,17 +109,6 @@ def cover_bbox(xmin, ymin, xmax, ymax, res: int) -> np.ndarray:
     return _from_grid(gx.ravel(), gy.ravel(), res)
 
 
-def pick_cover_res(xmin, ymin, xmax, ymax, max_cells: int = 64, max_res: int = 16) -> int:
-    """Finest resolution whose bbox cover stays under ``max_cells`` cells."""
-    for res in range(max_res, -1, -1):
-        n = 1 << res
-        nx = int((xmax + 180.0) / 360.0 * n) - int((xmin + 180.0) / 360.0 * n) + 1
-        ny = int((ymax + 90.0) / 180.0 * n) - int((ymin + 90.0) / 180.0 * n) + 1
-        if nx * ny <= max_cells:
-            return res
-    return 0
-
-
 def cover_polygon(exterior, interiors=(), res: int = 8, classify: bool = True):
     """Cells at ``res`` intersecting the polygon: (cells, full_flags).
 

@@ -14,10 +14,6 @@ from __future__ import annotations
 import numpy as np
 
 
-def identity() -> np.ndarray:
-    return np.array([[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]], dtype=np.float64)
-
-
 def compose(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """A ∘ B: apply B first, then A."""
     a3 = np.vstack([a, [0.0, 0.0, 1.0]])

@@ -527,10 +527,3 @@ def encode_jpeg(img: np.ndarray, quality: int = 75) -> bytes:
     out += bw.out
     out += b"\xff\xd9"  # EOI
     return bytes(out)
-
-
-def jpeg_features(img: np.ndarray, dim: int = 32) -> np.ndarray:
-    """Deterministic image statistics — same layout as png_features."""
-    from geo_spark.kernels.png import png_features
-
-    return png_features(img, dim)

@@ -597,22 +597,6 @@ def minimum_rotated_rect(coords: np.ndarray) -> np.ndarray:
     return best
 
 
-def vector_dot(ax, ay, bx, by):
-    return np.asarray(ax) * bx + np.asarray(ay) * by
-
-
-def vector_cross(ax, ay, bx, by):
-    return np.asarray(ax) * by - np.asarray(ay) * bx
-
-
-def vector_normalize(ax, ay):
-    ax = np.asarray(ax, dtype=np.float64)
-    ay = np.asarray(ay, dtype=np.float64)
-    n = np.hypot(ax, ay)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        return np.where(n == 0, 0.0, ax / n), np.where(n == 0, 0.0, ay / n)
-
-
 def line_interpolate_point_metric(
     coords: np.ndarray, fraction: float, metric: str = "haversine"
 ):

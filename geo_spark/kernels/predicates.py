@@ -186,11 +186,6 @@ def polygon_contains_point(px, py, exterior, interiors=()) -> np.ndarray:
     return polygon_position(px, py, exterior, interiors) == INSIDE
 
 
-def polygon_intersects_point(px, py, exterior, interiors=()) -> np.ndarray:
-    """``Intersects`` point×polygon: not Outside (boundary counts)."""
-    return polygon_position(px, py, exterior, interiors) != OUTSIDE
-
-
 def multipolygon_position(px, py, polygons) -> np.ndarray:
     """Position relative to a multipolygon.
 

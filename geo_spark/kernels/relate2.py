@@ -135,10 +135,6 @@ def _on_segs(p, segs: np.ndarray) -> bool:
     )
 
 
-def _cls_vs_points(p, point_set: set) -> int:
-    return I if (float(p[0]), float(p[1])) in point_set else E
-
-
 def _cls_vs_lines(p, segs, boundary: set) -> int:
     if (float(p[0]), float(p[1])) in boundary:
         return B

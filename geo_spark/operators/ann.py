@@ -169,8 +169,6 @@ def cosine_near_pairs(
     take connected components over the pairs (as ``dedup_tiered``'s min-id
     drop rule effectively does), not assume every qualifying pair appears.
     """
-    from pyspark.storagelevel import StorageLevel
-
     from geo_spark.operators.dedup import banded_candidate_pairs, ensure_parallelism
 
     H = planes if planes is not None else _hyperplanes(dim, n_planes, seed=7)
@@ -191,7 +189,7 @@ def cosine_near_pairs(
     banded = (
         d.withColumn("_b", band_udf(F.col("_vec")))
         .select(id_col, "_vec", F.posexplode("_b").alias("band_idx", "band_hash"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     pairs = banded_candidate_pairs(banded, id_col, "_vec", max_bucket)
     denom = _norm(F.col("_vec_a")) * _norm(F.col("_vec_b"))
@@ -258,9 +256,10 @@ def ivf_topk(
         queries.select(F.col(query_id_col), F.col(vec_col).alias("_qvec"))
         .withColumn("_cell", F.explode(probes("_qvec")))
     )
-    # queries ≪ corpus: broadcast the probe side so the corpus never
-    # shuffles for the cell equi-join
-    cand = cor.join(F.broadcast(q), "_cell")
+    # no broadcast hint: the probe side grows with the query set, so the
+    # planner (and AQE at runtime) decides from its size whether the corpus
+    # avoids the shuffle
+    cand = cor.join(q, "_cell")
     denom = _norm(F.col("_qvec")) * _norm(F.col("_cvec"))
     cos = F.when(denom == 0, F.lit(0.0)).otherwise(
         _dot(F.col("_qvec"), F.col("_cvec")) / denom

@@ -210,6 +210,11 @@ def dbscan(
     min_samples). It is decided at the point's home cell, where the full
     epsilon-neighborhood is present by the halo-replication invariant, and
     the local kernel already computes it — no extra join or shuffle.
+
+    The per-cell labels feed the edge fetch, the key collect and the
+    returned plan, so they are a ``localCheckpoint(eager=False)``: the local
+    kernel runs once, lineage is truncated there, and Spark frees the blocks
+    with the returned DataFrame.
     """
     if res is None:
         res = res_for_cell_height(2.0 * epsilon)
@@ -233,10 +238,19 @@ def dbscan(
             }
         )
 
-    labeled = pts.groupBy("_cell").applyInPandas(
-        local,
-        schema=f"{id_col} long, cell long, is_home boolean, label long, core boolean",
-    ).cache()
+    # explicit numbered repartition on the cell: the halo table is
+    # byte-tiny, so AQE would coalesce the groupBy shuffle to one task and
+    # run every cell's kernel serially; REPARTITION_BY_NUM is exempt from
+    # coalescing and already satisfies the applyInPandas clustering
+    labeled = (
+        pts.repartition(spark.sparkContext.defaultParallelism, "_cell")
+        .groupBy("_cell")
+        .applyInPandas(
+            local,
+            schema=f"{id_col} long, cell long, is_home boolean, label long, core boolean",
+        )
+        .localCheckpoint(eager=False)
+    )
 
     # witness edges: same point non-noise in two different cells
     a = labeled.filter("label >= 0").select(

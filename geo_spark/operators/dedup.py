@@ -76,15 +76,19 @@ _SHUFFLE_NODES = frozenset({
 
 def _plan_has_shuffle(df: DataFrame) -> bool:
     """True when the optimized logical plan contains an exchange-inducing
-    operator (join/aggregate/window/sort/repartition/distinct) at any depth.
-    Walks the plan's node names on the driver — never runs a job.
-    Conservative on failure."""
+    operator (join/aggregate/window/sort/repartition/distinct) at any depth,
+    including inside a cached input (an ``InMemoryRelation`` is a leaf whose
+    cached plan the walk enters). Walks the plan's node names on the driver
+    — never runs a job. Conservative on failure."""
     try:
         stack = [df._jdf.queryExecution().optimizedPlan()]
         while stack:
             node = stack.pop()
-            if node.nodeName() in _SHUFFLE_NODES:
+            name = node.nodeName()
+            if name in _SHUFFLE_NODES:
                 return True
+            if name == "InMemoryRelation":
+                stack.append(node.cacheBuilder().logicalPlan())
             kids = node.children()
             stack.extend(kids.apply(i) for i in range(kids.size()))
     except Exception:
@@ -92,16 +96,13 @@ def _plan_has_shuffle(df: DataFrame) -> bool:
     return False
 
 
-def ensure_parallelism(
-    df: DataFrame, min_parts: int | None = None, *, heavy: bool = False
-) -> DataFrame:
+def ensure_parallelism(df: DataFrame, *, heavy: bool = False) -> DataFrame:
     """Repartition narrow inputs so CPU-bound per-row stages use every core.
 
     Partition-target policy (size-aware — a blanket spread to
     ``defaultParallelism`` adds a shuffle + per-task pandas-UDF setup that
     swamps µs-per-row compute on small tables):
 
-    - explicit ``min_parts`` wins;
     - ``heavy=True`` — the caller declares ≥~100 µs/row Python kernel cost
       (Delaunay, overlay, buffer, hashing folds): spread to every core even
       when the input is byte-tiny;
@@ -114,9 +115,7 @@ def ensure_parallelism(
     """
     spark = df.sparkSession
     hw = spark.sparkContext.defaultParallelism
-    if min_parts is not None:
-        target = min_parts
-    elif heavy:
+    if heavy:
         target = hw
     else:
         nbytes = _input_bytes(df)
@@ -159,9 +158,13 @@ def banded_candidate_pairs(
     pair. Shuffle keys are always (band_idx, band_hash) — no cartesian.
 
     Plan selection is adaptive: one tiny aggregation probes the maximum
-    bucket size first (the caller persists ``banded``, so this reads the
-    cache). On healthy data — every bucket ≤ ``max_bucket`` — the original
-    single self-join plan runs with ZERO extra stages; only a
+    bucket size first. The callers pass ``banded`` as a
+    ``localCheckpoint(eager=False)``: the probe materializes it, both sides
+    of the self-join read the stored blocks (so the signature UDF runs
+    once), and Spark frees them with the returned DataFrame. The checkpoint
+    truncates lineage: a lost block fails the query rather than re-running
+    the signatures. On healthy data — every bucket ≤ ``max_bucket`` — the
+    original single self-join plan runs with ZERO extra stages; only a
     duplicate-heavy input pays for the guard machinery.
     """
     from pyspark.sql import Window
@@ -321,8 +324,6 @@ def minhash_lsh_pairs(
     take connected components over the pairs (as ``dedup_tiered``'s min-id
     drop rule effectively does), not assume every qualifying pair appears.
     """
-    from pyspark.storagelevel import StorageLevel
-
     rows_per_band = n_perm // bands
     sigs = minhash_signatures(df, id_col, text_col, n_perm, ngram, hasher)
     banded = sigs.select(
@@ -334,10 +335,7 @@ def minhash_lsh_pairs(
                 for b in range(bands)
             ])
         ).alias("band_idx", "band_hash"),
-    )
-    # both sides of the bucket self-join read this — persist so the
-    # shingle/signature pipeline runs once, not twice
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
     pairs = banded_candidate_pairs(banded, id_col, "signature", max_bucket)
     est = F.aggregate(
         F.zip_with("signature_a", "signature_b", lambda x, y: (x == y).cast("int")),
@@ -419,11 +417,9 @@ def simhash_near_pairs(
         .alias(f"band{b}")
         for b in range(n_bands)
     ]
-    from pyspark.storagelevel import StorageLevel
-
     banded = fps.select(
         id_col, "simhash", F.posexplode(F.array(*bands)).alias("band_idx", "band_hash")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
     pairs = banded_candidate_pairs(banded, id_col, "simhash", max_bucket)
     hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
@@ -515,6 +511,11 @@ def dedup_tiered(
     the drop rule needs.
 
     tier: null = kept, else 'exact' | 'simhash' | 'minhash'.
+
+    The tier tables every later tier reads are ``localCheckpoint(eager=False)``
+    (as are the band tables inside the pair operators): each is computed
+    once, truncates lineage, and is freed by Spark with the returned
+    DataFrame — nothing stays in the session's cache.
     """
     base = df.select(id_col, text_col)
 
@@ -526,15 +527,17 @@ def dedup_tiered(
         F.when(F.col(id_col) != F.col("_keep"), F.col("_keep")).alias("dup_of"),
         text_col,
     )
-    t1 = t1.cache()  # reused by every later tier and the final assembly
+    # reused by every later tier and the final assembly
+    t1 = t1.localCheckpoint(eager=False)
     s1 = t1.filter(F.col("tier").isNull()).select(id_col, text_col)
 
     # tier 2 — simhash near-dups among exact survivors
     sp = simhash_near_pairs(
         s1, id_col, text_col, max_hamming=simhash_max_hamming, max_bucket=max_bucket
     )
-    t2 = sp.groupBy(F.col("id_b").alias(id_col)).agg(F.min("id_a").alias("dup_of")).cache()
-    s2 = s1.join(t2, id_col, "left_anti").cache()
+    t2 = sp.groupBy(F.col("id_b").alias(id_col)).agg(F.min("id_a").alias("dup_of"))
+    t2 = t2.localCheckpoint(eager=False)
+    s2 = s1.join(t2, id_col, "left_anti").localCheckpoint(eager=False)
 
     # tier 3 — minhash LSH candidates among tier-2 survivors, kept only when
     # the exact n-gram Jaccard confirms

@@ -226,6 +226,13 @@ def voronoi_distributed(
     the whole construction is a sequence of bucketed joins + per-site
     work — the 100 TB shape.
 
+    The projected sites (read by the bbox aggregate, the halo replication
+    and the completion gather), the pass-1 cells (read by the uncertified
+    count and the returned union) and the uncertified set are each a
+    ``localCheckpoint(eager=False)``: computed once, truncating lineage (a
+    lost block fails the query rather than re-running pass 1), and freed by
+    Spark with the returned DataFrame.
+
     ``group_col``: independent diagram per group (the reference's
     per-geometry semantics). Per-group clip rects are collected to the
     driver — one row per group, fine up to ~10⁵ groups.
@@ -278,7 +285,7 @@ def voronoi_distributed(
                 out_rows.append((g, mid, float(mlon), float(mlat), _to_rows(ring)))
         out = sites.sparkSession.createDataFrame(out_rows, out_schema)
         return out if group_col is not None else out.drop(gcol)
-    s = s.cache()
+    s = s.localCheckpoint(eager=False)
     aggs = (
         s.groupBy(gcol)
         .agg(
@@ -358,9 +365,18 @@ def voronoi_distributed(
         out["cell_ring"] = out["cell_ring"].astype(object)
         return out
 
-    p1 = halo.groupBy(gcol, "_cell").applyInPandas(pass1, schema=schema1).cache()
+    # numbered repartition on the tile keys, as in pass 2 below: AQE would
+    # coalesce the byte-tiny halo shuffle and run the tiles serially
+    npart = s.sparkSession.sparkContext.defaultParallelism
+    p1 = (
+        halo.repartition(npart, gcol, "_cell")
+        .groupBy(gcol, "_cell")
+        .applyInPandas(pass1, schema=schema1)
+        .localCheckpoint(eager=False)
+    )
     done = p1.filter("certified").select(gcol, id_col, lon_col, lat_col, "cell_ring")
-    todo = p1.filter("NOT certified").select(gcol, id_col, lon_col, lat_col, "r").cache()
+    todo = p1.filter("NOT certified").select(gcol, id_col, lon_col, lat_col, "r")
+    todo = todo.localCheckpoint(eager=False)
 
     schema2 = (
         f"{gcol} {gtype}, {id_col} {itype}, {lon_col} double, {lat_col} double, "
@@ -437,7 +453,6 @@ def voronoi_distributed(
         # ONE task and serialize every per-site clip; REPARTITION_BY_NUM is
         # exempt from coalescing and already satisfies the applyInPandas
         # clustering (no second exchange)
-        npart = s.sparkSession.sparkContext.defaultParallelism
         out = (
             cand.unionByName(base_rows)
             .repartition(npart, "_sgrp", "_sid")

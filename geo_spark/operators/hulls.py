@@ -1,14 +1,8 @@
-"""Distributed convex hulls: per-group and global.
+"""Distributed convex hulls per group.
 
-- ``convex_hull_per_group``: ``groupBy(key).applyInPandas`` running the exact
-  QuickHull kernel (vertex-sequence parity with the reference,
-  ``qhull.rs:41-193``) per group — the Spark shape for "hull of each entity".
-- ``global_convex_hull``: hull of an entire (arbitrarily large) point table
-  via the hull-of-hulls identity: partial hull per partition
-  (``mapInPandas``, keeps ≤ partition-hull vertices), then one final exact
-  hull over the union of partial hulls. Hull-of-hulls is associative, so the
-  result is *identical* to a single-pass hull over all points while shipping
-  only O(partitions × hull size) to the final step.
+``convex_hull_per_group``: ``groupBy(key).applyInPandas`` running the exact
+QuickHull kernel (vertex-sequence parity with the reference,
+``qhull.rs:41-193``) per group — the Spark shape for "hull of each entity".
 """
 
 from __future__ import annotations
@@ -16,7 +10,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def convex_hull_per_group(
@@ -44,33 +37,3 @@ def convex_hull_per_group(
         f"{group_col} long, hull array<struct<x:double,y:double>>, n_vertices int"
     )
     return df.groupBy(group_col).applyInPandas(hull_fn, schema=out_schema)
-
-
-def global_convex_hull(
-    df: DataFrame, lon_col: str = "lon", lat_col: str = "lat"
-) -> np.ndarray:
-    """Exact hull ring of the whole table (numpy (h,2), closed CCW).
-
-    Two-level: per-partition partial hulls in parallel, final hull on the
-    driver over the tiny union (≤ ~100 vertices per partition in practice).
-    """
-    from geo_spark.kernels.hull import quick_hull
-
-    def partial(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            pts = pdf[[lon_col, lat_col]].to_numpy(dtype=np.float64)
-            if len(pts) < 4:
-                ring = pts
-            else:
-                ring = quick_hull(pts)[:-1]
-            yield pd.DataFrame({lon_col: ring[:, 0], lat_col: ring[:, 1]})
-
-    partial_df = df.select(lon_col, lat_col).mapInPandas(
-        partial, schema=f"{lon_col} double, {lat_col} double"
-    )
-    pts = partial_df.toPandas()[[lon_col, lat_col]].to_numpy(dtype=np.float64)
-    if len(pts) == 0:
-        return np.empty((0, 2), dtype=np.float64)
-    return quick_hull(pts)

@@ -23,6 +23,13 @@ candidates come from a cell-grid equi-join —
    remaining stragglers (a tiny set by construction) brute-force against the
    full target table — the exactness backstop.
 
+Each level's top-k is a ``localCheckpoint(eager=False)``: the straggler
+count materializes it, the returned union reads the stored blocks instead
+of re-running the candidate join, and Spark frees the blocks once the
+returned DataFrame is unreachable. The checkpoint truncates lineage, so a
+lost block fails the query instead of being recomputed (the trade
+``polygonize_dist`` makes).
+
 Result ordering matches BallTree semantics: ascending distance, ties broken
 by target id.
 """
@@ -33,7 +40,6 @@ import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from geo_spark.functions import (
     MEAN_EARTH_RADIUS,
@@ -133,7 +139,7 @@ def knn_join(
         rcov = _covered_radius_col(metric, F.col("_lat"), res_)
         return per_q.filter((F.col("_n") >= k) & (F.col("_kth") <= rcov)).select(query_id)
 
-    first = topk(candidates_at(q, res)).persist(StorageLevel.MEMORY_AND_DISK)
+    first = topk(candidates_at(q, res)).localCheckpoint(eager=False)
     filled = certified(first, res)
     pieces = [first.join(filled, query_id, "left_semi")]
     stragglers = q.join(filled, query_id, "left_anti")
@@ -148,9 +154,7 @@ def knn_join(
         level = max(level - _COARSE_RETRY_LEVELS, 1)
         if level == 1:
             break
-        retry = topk(candidates_at(stragglers, level)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        retry = topk(candidates_at(stragglers, level)).localCheckpoint(eager=False)
         fl = certified(retry, level)
         pieces.append(retry.join(fl, query_id, "left_semi"))
         stragglers = stragglers.join(fl, query_id, "left_anti")

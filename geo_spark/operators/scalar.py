@@ -33,12 +33,6 @@ def simplify_rdp(coords: Column, epsilon) -> Column:
     return gu.geom_udf(rdp, COORDS_TYPE)(gu.coords(coords), _dbl(epsilon))
 
 
-def simplify_vw(coords: Column, epsilon) -> Column:
-    from geo_spark.kernels.simplify import visvalingam
-
-    return gu.geom_udf(visvalingam, COORDS_TYPE)(gu.coords(coords), _dbl(epsilon))
-
-
 def simplify_stats(coords: Column, epsilon, algo: str = "rdp") -> Column:
     """struct<n:int, sum_x:double, sum_y:double> of the simplified line.
 
@@ -58,12 +52,6 @@ def simplify_stats(coords: Column, epsilon, algo: str = "rdp") -> Column:
     return gu.geom_udf(stats, "struct<n:int, sum_x:double, sum_y:double>")(
         gu.coords(coords), _dbl(epsilon)
     )
-
-
-def chaikin(coords: Column, n_iterations: int = 1) -> Column:
-    from geo_spark.kernels.simplify import chaikin_smoothing
-
-    return gu.geom_udf(chaikin_smoothing, COORDS_TYPE)(gu.coords(coords), F.lit(n_iterations))
 
 
 def densify(coords: Column, max_segment_length) -> Column:

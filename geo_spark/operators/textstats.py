@@ -1,6 +1,7 @@
 """Text analysis operators: token stats, quality score, language ID,
-document fingerprinting. All SQL-expressible (JVM-side, oracle-checkable)
-except the rolling-hash fingerprint which is a vectorized pandas UDF.
+winnowed document fingerprints. All SQL-expressible (JVM-side,
+oracle-checkable) except the winnowing window minimum, a vectorized pandas
+UDF.
 """
 
 from __future__ import annotations
@@ -148,58 +149,3 @@ def winnow_fingerprints(
     return ensure_parallelism(df, heavy=True).select(
         F.col(id_col), F.explode(win_min(gh)).alias("fp_hash")
     )
-
-
-def doc_fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                    window: int = 16) -> DataFrame:
-    """(id, fingerprint long) — winnowed rolling-hash document fingerprint.
-
-    Karp-Rabin rolling hash over bytes with window-minimum winnowing, XORed
-    into one 64-bit value: robust to small edits away from changed regions,
-    vectorized numpy inside a pandas UDF.
-    """
-
-    @F.pandas_udf(T.LongType())
-    def fp_udf(texts: pd.Series) -> pd.Series:
-        # uint64 arithmetic wraps mod 2^64 by design — silence numpy's
-        # scalar-overflow RuntimeWarning for the whole batch
-        np.seterr(over="ignore")
-        out = np.empty(len(texts), dtype=np.int64)
-        base = np.uint64(1099511628211)
-        for i, txt in enumerate(texts):
-            data = np.frombuffer((txt or "").encode("utf-8"), dtype=np.uint8)
-            if len(data) < window:
-                h = np.uint64(0xCBF29CE484222325)
-                for b in data:
-                    h = (h ^ np.uint64(b)) * base & np.uint64(0xFFFFFFFFFFFFFFFF)
-                out[i] = np.int64(h.astype(np.int64))
-                continue
-            # rolling polynomial hash of each window (vectorized via cumsum
-            # trick on powers); use float-free integer matrix: windows as
-            # strided view x powers
-            powers = np.empty(window, dtype=np.uint64)
-            powers[0] = np.uint64(1)
-            for j in range(1, window):
-                powers[j] = powers[j - 1] * base
-            strided = np.lib.stride_tricks.sliding_window_view(data, window).astype(np.uint64)
-            hashes = (strided * powers[None, ::-1]).sum(axis=1)
-            # winnowing: minimum per non-overlapping block of `window` hashes
-            nblocks = len(hashes) // window
-            if nblocks:
-                mins = hashes[: nblocks * window].reshape(nblocks, window).min(axis=1)
-            else:
-                mins = hashes
-            fp = np.uint64(0)
-            for m in mins:
-                fp ^= _mix(m)
-            out[i] = np.int64(fp.astype(np.int64))
-        return pd.Series(out)
-
-    def _mix(x: np.uint64) -> np.uint64:
-        x = np.uint64(x)
-        x ^= x >> np.uint64(33)
-        x = x * np.uint64(0xFF51AFD7ED558CCD) & np.uint64(0xFFFFFFFFFFFFFFFF)
-        x ^= x >> np.uint64(33)
-        return x
-
-    return df.select(F.col(id_col), fp_udf(F.col(text_col)).alias("fingerprint"))

@@ -207,3 +207,23 @@ def test_plan_has_shuffle_sees_nested_exchanges(spark):
     assert _plan_has_shuffle(agg.sample(0.5, seed=1).unionByName(plain))
     assert _plan_has_shuffle(agg)
     assert not _plan_has_shuffle(plain)
+    # a cached input's optimized plan is a childless InMemoryRelation: the
+    # walk must enter the plan it caches, and ensure_parallelism must then
+    # run no job (the partition probe would execute the aggregate). A fresh
+    # DataFrame: one whose plan was already optimized keeps that plan.
+    from geo_spark.operators.dedup import ensure_parallelism
+
+    cached = (
+        spark.range(100).groupBy((F.col("id") % 7).alias("k")).agg(F.count("*").alias("n"))
+    ).cache()
+    try:
+        assert _plan_has_shuffle(cached)
+        sc = spark.sparkContext
+        sc.setJobGroup("ensure_parallelism_cached", "ensure_parallelism_cached")
+        try:
+            ensure_parallelism(cached, heavy=True)
+        finally:
+            sc.setJobGroup("", "")
+        assert list(sc.statusTracker().getJobIdsForGroup("ensure_parallelism_cached")) == []
+    finally:
+        cached.unpersist()

@@ -55,7 +55,7 @@ def main():
     import __spark_entry__ as entrymod
     from geo_spark.session import get_spark
 
-    spark = get_spark(app_name="oracle_check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="oracle_check")
 
     out_path = os.environ.get("ORACLE_CHECK_OUT")
     results: dict = {}
